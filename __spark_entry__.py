@@ -504,7 +504,7 @@ def _parse_module_info(src: str):
                 preamble.append(
                     ast.get_source_segment(src, node) or ast.dump(node)
                 )
-        # mutable module-level literals (caches like _IVF_QUANTIZERS = {})
+        # mutable module-level literals (caches like `_MEMORY = {}`)
         # can be WRITTEN by functions outside a reader's closure — record
         # every def that references each such name so readers pull their
         # co-writers in (strings/numbers are immutable: excluded, or every

@@ -217,32 +217,15 @@ REGRESSION_ABS_SEC = 0.10
 REGRESSION_EXTRA_RUNS = 2
 
 
-# Round 15 (VERDICT r14 #2): cold-fit rows — (detail row name, headline
-# query) pairs timed with EVERY ANN disk-cache family cleared inside the
-# timed region (see the coldfit block in main()). BENCH_DETAIL-only.
+# Cold-fit rows — (detail row name, headline query) pairs timed right
+# after model_cache.clear() (see the coldfit block in main()).
+# BENCH_DETAIL-only.
 COLDFIT = [
     ("ann_pq_adc_coldfit", "ann_pq_adc_topk"),      # flat-PQ books
     ("ann_ivfpq_coldfit", "ann_ivfpq_topk"),        # coarse + residual books
     ("ann_ivf_coldfit", "ann_ivf_topk"),            # MLlib quantizer
     ("ann_ivf_incremental_coldfit", "ann_ivf_incremental"),  # index store
 ]
-
-_ANN_CACHE_SUBDIRS = ("pq_codebooks", "ivf_quantizer", "ivf_index")
-
-
-def _clear_ann_caches() -> None:
-    """Remove every on-disk ANN model cache family under the verified
-    scratch root, so the next fit call pays the full cold lifecycle."""
-    import shutil
-
-    from checkatron_spark.session import secure_cache_root
-
-    root = secure_cache_root()
-    if root is None:
-        return
-    for sub in _ANN_CACHE_SUBDIRS:
-        shutil.rmtree(os.path.join(root, sub), ignore_errors=True)
-
 
 def _regression_tol(prev: dict) -> float:
     """Cross-round tolerance for one query given its previous committed
@@ -464,26 +447,26 @@ def main() -> None:
         total += timings[name]
         print(f"[bench] {name}: {timings[name]}s", file=sys.stderr)
 
-    # round 15 (VERDICT r14 #2): COLD-FIT rows for every ANN family whose
-    # model persists to disk keyed on corpus identity (PQ codebooks, the
-    # shared IVF coarse quantizer, the MLlib quantizer, the IVF index
-    # store). The warm headline rows above deliberately measure the
-    # production SEARCH lifecycle (fit once per corpus version, search
-    # many times — the round-12/13 design), which means the cross-run
-    # disk cache hides fit cost from every committed bench. These rows
-    # make that cost a measured number: each run clears EVERY ANN cache
-    # family inside its own timed region, so the recorded floor is the
+    # COLD-FIT rows for every ANN family the model cache keeps (PQ
+    # codebooks, the shared IVF coarse quantizer, the MLlib quantizer, the
+    # IVF index store). The warm headline rows above deliberately measure
+    # the production SEARCH lifecycle (fit once per corpus version, search
+    # many times), so the model cache hides fit cost from them. These rows
+    # make that cost a measured number: before each timed run,
+    # model_cache.clear() drops both cache tiers and release_scratch()
+    # drops persisted frames, so the recorded time is the
     # fit+build+search total a first-ever run pays. BENCH_DETAIL-only
     # (in_total: false, like wide_diff) — the warm rows and the stdout
-    # driver contract are unchanged, and a silent fit regression now
-    # shows up in a committed artifact.
+    # driver contract are unchanged.
+    from checkatron_spark import model_cache
+
     for cold_name, q in COLDFIT:
         if q not in qs:
             continue
-        release_scratch()
         runs = []
         for _ in range(2):  # min-of-2: each run pays the full fit anyway
-            _clear_ann_caches()
+            model_cache.clear()
+            release_scratch()
             t0 = time.perf_counter()
             _force(qs[q](spark, SF_DIR))
             runs.append(round(time.perf_counter() - t0, 3))

@@ -25,10 +25,10 @@ Scale shape:
   same bounded-collect contract as the kmeans centroid loop. At corpus
   scale the fit input is a BOUNDED deterministic sample (``fit_sample``
   — the FAISS discipline: codebooks train on ~1e5 vectors, never the
-  corpus), and the fitted codebooks PERSIST to disk keyed by corpus
-  identity (``cache_key`` — the round-12 IVF-quantizer lifecycle:
-  fit once per corpus version, every later process loads instead of
-  refitting; corrupt/mismatched cache entries fall back to a refit).
+  corpus), and the fitted codebooks PERSIST in the model cache keyed by
+  corpus identity (``cache_key``: fit once per corpus version, every
+  later process loads instead of refitting; corrupt/mismatched entries
+  fall back to a refit — checkatron_spark/model_cache.py).
 - encode: one Arrow-batched kernel pass over the corpus (codebooks ride
   the task closure), emitting (id, subspace, code) rows — no joins.
 - search: the per-query distance tables (|Q|·m·k rows — tiny) BROADCAST;
@@ -44,12 +44,14 @@ surface — this module belongs to the large-scale training-data mandate
 
 from __future__ import annotations
 
+import json
 import os
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from checkatron_spark import model_cache
 from checkatron_spark.operators.similarity import topk_two_phase
 
 __all__ = [
@@ -67,17 +69,6 @@ __all__ = [
     "ivf_grid_incremental_topk",
     "ivf_occupancy_drift",
 ]
-
-# Same scratch root as the IVF quantizer cache (similarity.py): codebooks
-# are a pure function of (corpus identity, fit params), so they persist
-# across processes — a fresh JVM loads m·k·(dims/m) integers instead of
-# re-running the Lloyd job chain (the dominant cost of every PQ search
-# when re-paid per call — VERDICT r12 #1). ``None`` means "resolve per
-# call via session.secure_cache_root" (per-user dir, ownership-verified);
-# tests pin a tmp dir here. A root that fails verification disables
-# caching for the call rather than trusting a plantable path (ADVICE r13).
-_PQ_CACHE_ROOT: str | None = None
-
 
 def _quantized(df: DataFrame, id_col: str, vec_col: str, scale: int):
     """(id, _x array<bigint>) on the BIGINT grid, degenerate embeddings
@@ -154,33 +145,11 @@ def _fit_sample_grid(xq: DataFrame, id_col: str, n: int | None) -> DataFrame:
     return xq.orderBy(h.asc(), F.col(id_col).asc()).limit(n)
 
 
-def _books_fingerprint(cache_key: str, tag: str, params: tuple) -> str:
-    import hashlib
-
-    return hashlib.md5(f"{cache_key}|{tag}|{params}".encode()).hexdigest()
-
-
-def _books_cache_path(cache_key: str, tag: str, params: tuple) -> str | None:
-    """Cache file path, or None when no trustworthy root exists — the
-    fingerprint doubles as the filename AND the content binding checked
-    at load (ADVICE r13: a valid-SHAPED planted entry must not silently
-    change ANN results; with the embedded fingerprint an entry also has
-    to claim the exact (corpus key, tag, params) it is being read for)."""
-    from checkatron_spark.session import secure_cache_root
-
-    root = secure_cache_root(_PQ_CACHE_ROOT)
-    if root is None:
-        return None
-    h = _books_fingerprint(cache_key, tag, params)
-    return os.path.join(root, "pq_codebooks", f"{h}.json")
-
-
 def _books_valid(books, *, m: int, k: int, dims: int | None) -> bool:
-    """Never trust a planted/partial/mismatched cache entry (the ADVICE
-    r12 rule for the IVF model cache): shape must be exactly m x k x sub
-    with all-int centroids (bool is an int subclass and is NOT a centroid
-    value — ADVICE r13), and m·sub must equal the corpus dims when the
-    caller knows them."""
+    """Never trust a planted/partial/mismatched cache entry: shape must be
+    exactly m x k x sub with all-int centroids (bool is an int subclass
+    and is NOT a centroid value), and m·sub must equal the corpus dims
+    when the caller knows them."""
     if not isinstance(books, list) or len(books) != m:
         return False
     subs = set()
@@ -200,17 +169,16 @@ def _books_valid(books, *, m: int, k: int, dims: int | None) -> bool:
     return dims is None or next(iter(subs)) * m == dims
 
 
+def _read_json(path: str):
+    with open(path) as fh:
+        return json.load(fh)
+
+
 def _load_books(path: str, *, m: int, k: int, dims: int | None):
     """Load {"fp": fingerprint, "books": [...]} — the fingerprint must
-    match the path's own (path basename IS the fingerprint), so pre-r14
-    bare-list entries and entries copied between keys both refit."""
-    import json
-
-    try:
-        with open(path) as fh:
-            obj = json.load(fh)
-    except Exception:  # noqa: BLE001 — miss/partial write: refit
-        return None
+    match the path's own (path basename IS the fingerprint), so bare-list
+    entries and entries copied between keys both refit."""
+    obj = model_cache.read(path, _read_json)
     if not isinstance(obj, dict):
         return None
     fp = os.path.basename(path).rsplit(".", 1)[0]
@@ -220,18 +188,13 @@ def _load_books(path: str, *, m: int, k: int, dims: int | None):
     return books if _books_valid(books, m=m, k=k, dims=dims) else None
 
 
-def _save_books(path: str, books) -> None:
-    import json
-
-    try:
-        os.makedirs(os.path.dirname(path), mode=0o700, exist_ok=True)
-        tmp = f"{path}.tmp.{os.getpid()}"
-        fp = os.path.basename(path).rsplit(".", 1)[0]
+def _publish_books(path: str | None, books) -> None:
+    """Publish ``books`` bound to the entry's own fingerprint."""
+    def write(tmp: str) -> None:
         with open(tmp, "w") as fh:
-            json.dump({"fp": fp, "books": books}, fh)
-        os.replace(tmp, path)  # atomic: readers see whole files only
-    except Exception:  # noqa: BLE001 — cache is best-effort
-        pass
+            json.dump({"fp": os.path.basename(path), "books": books}, fh)
+
+    model_cache.publish(path, write)
 
 
 def fit_pq_codebooks(
@@ -256,10 +219,8 @@ def fit_pq_codebooks(
     sample (see :func:`_fit_sample_grid`); ``cache_key`` persists the
     fitted codebooks to disk keyed by (corpus identity, params) — the
     fit is deterministic, so a cache hit IS the refit, job-free."""
-    path = (
-        _books_cache_path(cache_key, "pq", (m, k, iters, scale, fit_sample))
-        if cache_key is not None
-        else None
+    path = model_cache.entry(
+        model_cache.PQ_BOOKS, cache_key, "pq", (m, k, iters, scale, fit_sample)
     )
     if path is not None:
         books = _load_books(path, m=m, k=k, dims=None)
@@ -270,8 +231,7 @@ def fit_pq_codebooks(
         _fit_sample_grid(xq, id_col, fit_sample),
         id_col=id_col, m=m, k=k, iters=iters,
     )
-    if path is not None:
-        _save_books(path, books)
+    _publish_books(path, books)
     return books
 
 
@@ -669,9 +629,9 @@ def _fit_coarse_cached(
     dims: int | None = None,
 ) -> list[list[int]]:
     """The cached coarse-quantizer fit shared by ivfpq_topk and
-    ivf_grid_topk (round 14): both run the IDENTICAL deterministic
-    m=1 Lloyd chain on the same md5-bounded fitset, so they share one
-    cache slot — an audit that runs both pays the coarse fit once.
+    ivf_grid_topk: both run the IDENTICAL deterministic m=1 Lloyd chain
+    on the same md5-bounded fitset, so they share one cache slot — an
+    audit that runs both pays the coarse fit once.
 
     A cache HIT must stay job-free (``dims=None`` skips the width check
     against the corpus): the warm search/admission paths deliberately do
@@ -681,18 +641,15 @@ def _fit_coarse_cached(
     guard the hot loop already enforces). A cache MISS still pays the
     corpus-wide stats guard before fitting — garbage codebooks must fail
     at fit time, not at first use."""
-    cpath = (
-        _books_cache_path(
-            cache_key, "ivfpq-coarse", (n_cells, iters, scale, fit_sample)
-        )
-        if cache_key is not None
-        else None
+    cpath = model_cache.entry(
+        model_cache.PQ_BOOKS, cache_key, "ivfpq-coarse",
+        (n_cells, iters, scale, fit_sample),
     )
     if cpath is not None:
         cached = _load_books(cpath, m=1, k=n_cells, dims=dims)
         if cached is not None:
             return cached[0]
-    # FIT path only (ADVICE r14): the cold path consumes the quantized
+    # FIT path only: the cold path consumes the quantized
     # corpus 2-3 times — the _grid_stats guard scan, the md5 top-n fitset,
     # and (in ivf_grid_index) the assignment kernel, which builds the
     # identical _quantized plan and therefore reads this cache entry too
@@ -707,9 +664,20 @@ def _fit_coarse_cached(
         _fit_sample_grid(xq, id_col, fit_sample),
         id_col=id_col, m=1, k=n_cells, iters=iters,
     )[0]
-    if cpath is not None:
-        _save_books(cpath, [coarse])
+    _publish_books(cpath, [coarse])
     return coarse
+
+
+def _injected(index: DataFrame | None, coarse: list | None) -> bool:
+    """Whether the caller injected a prebuilt (index, coarse) pair. One
+    without the other raises: the index's cells are meaningless under any
+    other quantizer, and a silent refit would hide the bug."""
+    if (index is None) != (coarse is None):
+        raise ValueError(
+            "pass index= and coarse= together (both from ivf_grid_index), "
+            "or neither"
+        )
+    return index is not None
 
 
 def ivf_grid_index(
@@ -757,7 +725,7 @@ def ivf_grid_topk(
     coarse: list[list[int]] | None = None,
 ) -> DataFrame:
     """Grid-integer IVF top-k — the APPROXIMATE inverted-file search a
-    user reaches for first (VERDICT r13 #2), exact-arithmetic twin of
+    user reaches for first, exact-arithmetic twin of
     the MLlib-backed ``similarity.ivf_topk`` but fully replayable in the
     DuckDB oracle: the coarse quantizer is this module's deterministic
     m=1 Lloyd chain (md5-bounded fitset, disk-cached — the slot is
@@ -771,15 +739,15 @@ def ivf_grid_topk(
     (centroids in the task closure, original vectors carried through —
     no corpus re-join), the |Q|·n_cells probe table broadcasts, and the
     scoring join keys on cell id, so per-query cost tracks probed-cell
-    population, not corpus size. Round 14: a quantizer-cache HIT runs
-    zero pre-search corpus jobs — the corpus-wide _grid_stats guard
-    moved inside the fit path (_fit_coarse_cached), the assignment
-    kernel re-validates per batch, and the single-consumer corpus frame
-    is no longer persisted. ``index``/``coarse`` (together) inject a
-    prebuilt :func:`ivf_grid_index` — the audit's shared-build seam.
+    population, not corpus size. A quantizer-cache HIT runs zero
+    pre-search corpus jobs — the corpus-wide _grid_stats guard lives in
+    the fit path (_fit_coarse_cached) and the assignment kernel
+    re-validates per batch. ``index``/``coarse`` inject a prebuilt
+    :func:`ivf_grid_index` — the audit's shared-build seam; they come
+    together or not at all (one alone raises ``ValueError``).
     Returns (query_id, neighbor_id, rank, ivf_dist), ties
     (dist, neighbor) — deterministic on both engines."""
-    if index is None or coarse is None:
+    if not _injected(index, coarse):
         index, coarse = ivf_grid_index(
             vectors, id_col=id_col, vec_col=vec_col, n_cells=n_cells,
             iters=iters, scale=scale, fit_sample=fit_sample,
@@ -877,16 +845,17 @@ def ivfpq_topk(
     computation. Returns (query_id, neighbor_id, rank, adc_dist) —
     neighbors in unprobed cells are absent by design.
 
-    Round 14 warm-path shape (guide §1.2/§2.4): when BOTH the coarse
-    quantizer and the residual codebooks hit their caches, the search
-    runs zero pre-search corpus jobs — dims derive from the cached books
-    (the kernels re-validate per batch at execution), the corpus-wide
-    _grid_stats guard is paid only on the fit path, and the residual
-    frame is persisted only when the fit consumes it twice. Codes carry
+    Warm-path shape: when BOTH the coarse quantizer and the residual
+    codebooks hit their caches, the search runs zero pre-search corpus
+    jobs — dims derive from the cached books (the kernels re-validate
+    per batch at execution), the corpus-wide _grid_stats guard is paid
+    only on the fit path, and the residual frame is persisted only when
+    the fit consumes it twice. Codes carry
     their cell through the encode kernel (pq_encode_grid passthrough),
     replacing the former corpus-sized codes⋈cell shuffle join with a few
-    bytes per row of Arrow traffic. ``index``/``coarse`` (together)
-    inject a prebuilt :func:`ivf_grid_index`: residuals derive from it as
+    bytes per row of Arrow traffic. ``index``/``coarse`` (together — one
+    alone raises ``ValueError``) inject a prebuilt
+    :func:`ivf_grid_index`: residuals derive from it as
     ``zip_with(_x, centroid[cell], a - b)`` — the identical exact BIGINT
     arithmetic the kernel performs (pinned in tests/test_pq.py) — so a
     caller that already built the index (the recall audit) skips the
@@ -895,20 +864,16 @@ def ivfpq_topk(
     from checkatron_spark.session import scratch_persist
 
     xq = _quantized(vectors, id_col, vec_col, scale)
-    rpath = (
-        _books_cache_path(
-            cache_key, "ivfpq-res", (n_cells, m, k, iters, scale, fit_sample)
-        )
-        if cache_key is not None
-        else None
+    rpath = model_cache.entry(
+        model_cache.PQ_BOOKS, cache_key, "ivfpq-res",
+        (n_cells, m, k, iters, scale, fit_sample),
     )
     books = _load_books(rpath, m=m, k=k, dims=None) if rpath else None
-    if coarse is None or index is None:
+    if not _injected(index, coarse):
         coarse = _fit_coarse_cached(
             xq, id_col=id_col, n_cells=n_cells, iters=iters, scale=scale,
             fit_sample=fit_sample, cache_key=cache_key,
         )
-        index = None  # a bare index without its coarse is unusable
     dims = len(coarse[0])
     if books is not None and len(books[0][0]) * m != dims:
         books = None  # stale/mismatched residual cache entry: refit
@@ -928,9 +893,8 @@ def ivfpq_topk(
             F.expr("zip_with(_x, _cm, (a, b) -> a - b)").alias("_x"),
         )
     else:
-        # assignment + residuals in one zero-shuffle Arrow pass (round 13
-        # — replaces the broadcast fan-out + corpus x n_cells array-keyed
-        # groupBy argmin; identical integer rule, _assign_residual_grid)
+        # assignment + residuals in one zero-shuffle Arrow pass
+        # (identical integer rule, _assign_residual_grid)
         res = _assign_residual_grid(xq, coarse, id_col=id_col)
     if books is None:
         # residual fit input = the residuals OF THE FITSET ROWS (the same
@@ -943,8 +907,7 @@ def ivfpq_topk(
         books = fit_codebooks_grid(
             rfit, id_col=id_col, m=m, k=k, iters=iters
         )
-        if rpath is not None:
-            _save_books(rpath, books)
+        _publish_books(rpath, books)
     spark = xq.sparkSession
     cdf = spark.createDataFrame(
         list(enumerate(coarse)), "cell int, _cm array<bigint>"
@@ -1002,14 +965,14 @@ def ivfpq_topk(
 
 
 # ---------------------------------------------------------------------------
-# Incremental IVF index maintenance (round 14, VERDICT r13 #5). The cache
-# story so far was all-or-nothing: caches key on corpus identity, so ANY
-# corpus change refit everything. This block is the delta path — the
-# LSM/CDC shape from streaming.py applied to the vector index:
+# Incremental IVF index maintenance. Model-cache entries key on corpus
+# identity, so ANY corpus change would refit everything. This block is the
+# delta path — the LSM/CDC shape from streaming.py applied to the vector
+# index:
 #
-# - the BASE index (vec_id, cell, _x) persists as a parquet store under
-#   the verified per-user scratch root (one build per corpus version;
-#   later processes LOAD assignments instead of re-running the kernel);
+# - the BASE index (vec_id, cell, _x) persists as a parquet store in the
+#   model cache (one build per corpus version; later processes LOAD
+#   assignments instead of re-running the kernel);
 # - a changefeed batch (op, vec_id, embedding) admits against the FITTED
 #   quantizer: upserts are assigned to existing cells by the identical
 #   argmin kernel (work ∝ batch), tombstones drop via a broadcast
@@ -1024,19 +987,6 @@ def ivfpq_topk(
 # ---------------------------------------------------------------------------
 
 
-def _index_store_path(cache_key: str, params: tuple) -> str | None:
-    """Parquet store path for a maintained IVF index, or None when no
-    trustworthy cache root exists (same trust rules as the codebook
-    cache — secure_cache_root ownership/permission checks)."""
-    from checkatron_spark.session import secure_cache_root
-
-    root = secure_cache_root(_PQ_CACHE_ROOT)
-    if root is None:
-        return None
-    h = _books_fingerprint(cache_key, "ivf-index", params)
-    return os.path.join(root, "ivf_index", h)
-
-
 def _load_or_build_index(
     xq: DataFrame,
     coarse: list[list[int]],
@@ -1046,31 +996,27 @@ def _load_or_build_index(
     params: tuple,
 ) -> DataFrame:
     """The base index (id, cell, _x): load from the parquet store on a
-    hit, else one zero-shuffle assignment pass over the corpus, then
-    persist (write-tmp + atomic rename; a hit IS the rebuild because
-    assignment is deterministic). Corrupt/partial stores rebuild."""
-    spark = xq.sparkSession
-    path = (
-        _index_store_path(cache_key, params) if cache_key is not None
-        else None
+    hit, else one zero-shuffle assignment pass over the corpus, published
+    to the store (a hit IS the rebuild because assignment is
+    deterministic). Corrupt/partial stores rebuild."""
+    path = model_cache.entry(
+        model_cache.IVF_INDEX, cache_key, "ivf-index", params
     )
-    if path is not None and os.path.isdir(path):
-        try:
-            idx = spark.read.parquet(path)
-            if set(idx.columns) == {id_col, "cell", "_x"}:
-                return idx
-        except Exception:  # noqa: BLE001 — partial write: rebuild below
-            pass
-    idx = _assign_residual_grid(xq, coarse, id_col=id_col, residual=False)
-    if path is not None:
-        try:
-            os.makedirs(os.path.dirname(path), mode=0o700, exist_ok=True)
-            tmp = f"{path}.tmp.{os.getpid()}"
-            idx.write.mode("overwrite").parquet(tmp)
-            os.replace(tmp, path)
-            return spark.read.parquet(path)
-        except Exception:  # noqa: BLE001 — cache is best-effort
-            pass
+
+    def stored() -> DataFrame | None:
+        idx = model_cache.read(path, xq.sparkSession.read.parquet)
+        ok = idx is not None and set(idx.columns) == {id_col, "cell", "_x"}
+        return idx if ok else None
+
+    idx = stored()
+    if idx is None:
+        built = _assign_residual_grid(
+            xq, coarse, id_col=id_col, residual=False
+        )
+        model_cache.publish(path, built.write.parquet)
+        idx = stored()  # later actions read the store, not the kernel
+        if idx is None:
+            idx = built
     return idx
 
 
@@ -1097,11 +1043,10 @@ def ivf_grid_apply_changes(
     the quantizer loads from its cache (zero Lloyd jobs), the base index
     loads from its parquet store (zero assignment jobs), the batch
     assignment kernel runs over batch rows only, and the tombstone
-    anti-join broadcasts the (small) batch id set map-side. Round 14:
-    the warm path previously still paid one corpus-wide _grid_stats
-    scan per call — the one job that was NOT ∝ batch; the guard now
-    lives on the fit path only (_fit_coarse_cached), and the assignment
-    kernel re-validates dims/overflow per batch at execution."""
+    anti-join broadcasts the (small) batch id set map-side. The
+    corpus-wide _grid_stats guard (a job NOT ∝ batch) runs on the fit
+    path only (_fit_coarse_cached); the assignment kernel re-validates
+    dims/overflow per batch at execution."""
     xq = _quantized(base, id_col, vec_col, scale)
     coarse = _fit_coarse_cached(
         xq, id_col=id_col, n_cells=n_cells, iters=iters, scale=scale,

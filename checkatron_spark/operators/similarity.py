@@ -20,11 +20,11 @@ Two paths:
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+from checkatron_spark import model_cache
 
 __all__ = [
     "dot",
@@ -510,34 +510,6 @@ def _ivf_feats(vectors: DataFrame, id_col: str, vec_col: str) -> DataFrame:
     ).filter(F.col("_cn") > 0.0)
 
 
-# On-disk quantizer cache root (VERDICT r11 #5): the fitted coarse
-# quantizer is a pure function of (corpus version, n_cells, seed, max_iter,
-# fit_fraction) — refitting it per process cost the bench's first
-# ann_ivf_topk run 8.7 s vs the 2.7 s steady state. MLlib's own
-# KMeansModel.save/load round-trips the exact model, so a fresh JVM loads
-# centroids instead of re-running count + sample + Lloyd.
-# ``None`` -> resolve per call via session.secure_cache_root (per-user
-# dir, ownership/permission-verified; ADVICE r13: the old shared /tmp
-# default was plantable because makedirs(mode=0o700) only applies to
-# dirs it creates). Tests pin a tmp dir here.
-_IVF_CACHE_ROOT: str | None = None
-
-
-def _ivf_cache_path(cache_key: str, n_cells: int, seed: int,
-                    max_iter: int, fit_fraction) -> str | None:
-    import hashlib
-
-    from checkatron_spark.session import secure_cache_root
-
-    root = secure_cache_root(_IVF_CACHE_ROOT)
-    if root is None:
-        return None  # no trustworthy root — caller refits, never trusts
-    h = hashlib.md5(
-        f"{cache_key}|{n_cells}|{seed}|{max_iter}|{fit_fraction}".encode()
-    ).hexdigest()
-    return os.path.join(root, "ivf_quantizer", h)
-
-
 def fit_ivf_quantizer(
     vectors: DataFrame,
     *,
@@ -555,31 +527,25 @@ def fit_ivf_quantizer(
     the returned model to ``ivf_topk(model=...)`` yields exactly the result
     an inline refit would.
 
-    ``cache_key`` (round 12) additionally persists the fitted model under
-    the scratch dir keyed by (cache_key, n_cells, seed, max_iter,
-    fit_fraction): later processes LOAD the identical centroids instead of
-    refitting. The caller's key must change when the corpus does (the
+    ``cache_key`` additionally persists the fitted model in the model
+    cache keyed by (cache_key, n_cells, seed, max_iter, fit_fraction):
+    later processes LOAD the identical centroids (MLlib's save/load
+    round-trips the exact model) instead of re-running count + sample +
+    Lloyd. The caller's key must change when the corpus does (the
     declared queries use the parquet file's realpath + mtime + size).
     Corrupt/partial cache entries fall back to a refit, never an error."""
     from pyspark.ml.clustering import KMeans, KMeansModel
 
-    path = (
-        _ivf_cache_path(cache_key, n_cells, seed, max_iter, fit_fraction)
-        if cache_key is not None
-        else None
+    path = model_cache.entry(
+        model_cache.IVF_QUANTIZER, cache_key, "kmeans",
+        (n_cells, seed, max_iter, fit_fraction),
     )
-    if path is not None and os.path.isdir(path):
-        try:
-            model = KMeansModel.load(path)
-            # never trust a planted/mismatched entry (ADVICE r12: the
-            # scratch root is world-readable /tmp by default) — the
-            # loaded model must actually be a quantizer for THESE params
-            if model.getK() == n_cells and model.getOrDefault(
-                model.seed
-            ) == seed:
-                return model
-        except Exception:  # noqa: BLE001 — partial write: refit below
-            pass
+    model = model_cache.read(path, KMeansModel.load)
+    # never trust a planted/mismatched entry — the loaded model must
+    # actually be a quantizer for THESE params
+    if (model is not None and model.getK() == n_cells
+            and model.getOrDefault(model.seed) == seed):
+        return model
     feats = _ivf_feats(vectors, id_col, vec_col)
     n_vecs = feats.count()
     if fit_fraction is None:
@@ -590,16 +556,7 @@ def fit_ivf_quantizer(
         else feats
     )
     model = KMeans(k=n_cells, seed=seed, maxIter=max_iter).fit(fit_set)
-    if path is not None:
-        try:
-            # owner-only cache root (ADVICE r12) — makedirs only sets the
-            # mode on dirs it creates, so this is best-effort on reuse
-            os.makedirs(
-                os.path.dirname(path), mode=0o700, exist_ok=True
-            )
-            model.write().overwrite().save(path)
-        except Exception:  # noqa: BLE001 — cache is best-effort
-            pass
+    model_cache.publish(path, model.write().save)
     return model
 
 

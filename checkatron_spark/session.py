@@ -110,46 +110,6 @@ def scratch_tempdir(prefix: str) -> str:
     return work
 
 
-def secure_cache_root(override: str | None = None) -> str | None:
-    """Resolve the on-disk cache root for cross-process artifacts (PQ
-    codebooks, the IVF quantizer) and verify it can be TRUSTED, or return
-    ``None`` so callers silently disable caching (ADVICE r13: the old
-    shared ``/tmp/checkatron_spark_scratch`` default was world-plantable —
-    ``makedirs(mode=0o700)`` only applies when the dir doesn't already
-    exist, so anyone pre-creating the path controlled every cached model).
-
-    Resolution order: ``override`` (tests pin a tmp dir), then
-    ``$SPARK_GRAFT_SCRATCH``, then a PER-USER default
-    ``/tmp/checkatron_spark_scratch-uid<uid>``. Whatever resolves must be
-    a real directory (not a symlink) owned by the current uid with no
-    group/other write bits — an existing root failing any check yields
-    ``None``, never a fallback that silently trusts it."""
-    import stat
-
-    root = (
-        override
-        or os.environ.get("SPARK_GRAFT_SCRATCH")
-        or f"/tmp/checkatron_spark_scratch-uid{os.getuid()}"
-    )
-    try:
-        st = os.lstat(root)
-    except FileNotFoundError:
-        try:
-            os.makedirs(root, mode=0o700, exist_ok=True)
-            st = os.lstat(root)
-        except OSError:
-            return None
-    except OSError:
-        return None
-    if not stat.S_ISDIR(st.st_mode):
-        return None  # symlink or file planted at the cache path
-    if st.st_uid != os.getuid():
-        return None
-    if st.st_mode & (stat.S_IWGRP | stat.S_IWOTH):
-        return None
-    return root
-
-
 def release_scratch() -> int:
     """Unpersist every registered scratch frame; returns how many."""
     n = 0

@@ -47,7 +47,8 @@ _SESSION_GAP_SECONDS = 30 * 60
 # every subsequent stream run — in production the feed EXISTS (upstream CDC
 # produces it); computing the compact delta is not part of the replay path.
 # Deterministic content (fixed inputs, fixed delta), so reuse is exact.
-# Same lifecycle precedent as pipelines._IVF_QUANTIZERS.
+# Keyed by Spark app like the model cache's memory tier; not a model, so
+# model_cache.clear() leaves it alone.
 _FEED_CACHE: dict[tuple[str, str, str], str] = {}
 
 
@@ -472,9 +473,9 @@ def apply_delta_stream(
         )
         # net image per key: latest epoch wins (key-partitioned window —
         # no global funnel; log size ∝ churn since the last compaction).
-        # Persisted (round 15): two consumers — the touched-bucket
-        # collect and the apply_delta fold — otherwise each re-run the
-        # log read + window; released right after the epoch write.
+        # Persisted: two consumers — the touched-bucket collect and the
+        # apply_delta fold — otherwise each re-run the log read + window;
+        # released once the epoch write is done or has failed.
         w = Window.partitionBy(*keys).orderBy(F.col("_epoch").desc())
         latest = (
             log.withColumn("_rn", F.row_number().over(w))
@@ -482,52 +483,56 @@ def apply_delta_stream(
             .drop("_rn", "_epoch")
             .persist()
         )
-        touched = sorted(
-            r[0]
-            for r in latest.select(_bucket(latest).alias("_b"))
-            .distinct()
-            .collect()
-        )
-        cur_paths = [manifest[b] for b in touched if b in manifest]
-        cur = (
-            spark.read.parquet(*cur_paths)
-            if cur_paths
-            else spark.createDataFrame([], seeded.schema)
-        )
-        if io_log is not None:
-            io_log.append(
-                {
-                    "mode": "compact",
-                    "epochs": list(pending),
-                    "touched": touched,
-                    "files_read": list(cur.inputFiles()) if cur_paths else [],
-                    "live_files": sum(
-                        len(os.listdir(p)) for p in manifest.values()
-                    ),
-                }
+        try:
+            touched = sorted(
+                r[0]
+                for r in latest.select(_bucket(latest).alias("_b"))
+                .distinct()
+                .collect()
             )
-        nxt = apply_delta(cur, latest, keys, value_cols)
-        # next epoch id must clear every epoch dir on disk, not just
-        # max(pending)+1: after a crash between the manifest commit and
-        # the log reap, the replayed fold would otherwise OVERWRITE the
-        # live epoch dir it is concurrently reading from
-        existing = max(
-            (
-                int(d[5:])
-                for d in os.listdir(state_dir)
-                if d.startswith("epoch") and d[5:].isdigit()
-            ),
-            default=0,
-        )
-        out_dir = f"{state_dir}/epoch{max(max(pending), existing) + 1}"
-        # repartition ON the bucket before partitionBy: otherwise every
-        # write task emits a sliver file into every touched bucket dir
-        # (tasks x buckets tiny files) and later compactions snowball on
-        # the accumulated small-file reads — this pins ~1 file per bucket
-        nxt.withColumn("_bucket", _bucket(nxt)).repartition(
-            max(len(touched) // 2, 1), F.col("_bucket")
-        ).write.mode("overwrite").partitionBy("_bucket").parquet(out_dir)
-        latest.unpersist(blocking=False)
+            cur_paths = [manifest[b] for b in touched if b in manifest]
+            cur = (
+                spark.read.parquet(*cur_paths)
+                if cur_paths
+                else spark.createDataFrame([], seeded.schema)
+            )
+            if io_log is not None:
+                io_log.append(
+                    {
+                        "mode": "compact",
+                        "epochs": list(pending),
+                        "touched": touched,
+                        "files_read": (
+                            list(cur.inputFiles()) if cur_paths else []
+                        ),
+                        "live_files": sum(
+                            len(os.listdir(p)) for p in manifest.values()
+                        ),
+                    }
+                )
+            nxt = apply_delta(cur, latest, keys, value_cols)
+            # next epoch id must clear every epoch dir on disk, not just
+            # max(pending)+1: after a crash between the manifest commit and
+            # the log reap, the replayed fold would otherwise OVERWRITE the
+            # live epoch dir it is concurrently reading from
+            existing = max(
+                (
+                    int(d[5:])
+                    for d in os.listdir(state_dir)
+                    if d.startswith("epoch") and d[5:].isdigit()
+                ),
+                default=0,
+            )
+            out_dir = f"{state_dir}/epoch{max(max(pending), existing) + 1}"
+            # repartition ON the bucket before partitionBy: otherwise every
+            # write task emits a sliver file into every touched bucket dir
+            # (tasks x buckets tiny files) and later compactions snowball on
+            # the accumulated small-file reads — this pins ~1 file per bucket
+            nxt.withColumn("_bucket", _bucket(nxt)).repartition(
+                max(len(touched) // 2, 1), F.col("_bucket")
+            ).write.mode("overwrite").partitionBy("_bucket").parquet(out_dir)
+        finally:
+            latest.unpersist(blocking=False)
         written = _live_buckets(out_dir)
         for b in touched:
             if b in written:

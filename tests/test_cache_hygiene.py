@@ -74,3 +74,69 @@ def test_scratch_cache_context_manager(spark):
     except RuntimeError:
         pass
     assert len(_SCRATCH) == 0
+
+
+def test_audit_pool_joined_when_a_constructor_raises(spark, monkeypatch):
+    """The recall audit's background-materialization pool must not leak
+    its worker threads when building a method raises mid-audit."""
+    import threading
+
+    import pytest
+
+    from checkatron_spark import pipelines as P
+    from checkatron_spark.operators import pq
+
+    def broken_build(*a, **kw):
+        raise RuntimeError("injected build failure")
+
+    monkeypatch.setattr(pq, "ivf_grid_index", broken_build)
+    baseline = set(threading.enumerate())
+    with pytest.raises(RuntimeError, match="injected") as err:
+        P.q_ann_recall_audit(spark, SF_DIR)
+    # err keeps the audit's frame (and so its pool) reachable: a worker
+    # still alive here is a leak, not garbage awaiting collection
+    assert "injected" in str(err.value)
+    leaked = [t.name for t in threading.enumerate() if t not in baseline]
+    assert leaked == []
+    release_scratch()
+
+
+def test_compaction_releases_its_frame_when_the_write_fails(
+    spark, tmp_path, monkeypatch
+):
+    """apply_delta_stream's compaction persists the folded log; an epoch
+    write that raises must still unpersist it."""
+    import pytest
+    from pyspark.sql import DataFrameWriter
+    from pyspark.sql import functions as F
+
+    from checkatron_spark import streaming as ST
+
+    base = spark.range(40).select(
+        F.col("id").alias("k"), (F.col("id") * 2).alias("v")
+    )
+    feed = str(tmp_path / "feed")
+    spark.createDataFrame(
+        [("U", 4, 44), ("D", 9, None), ("I", 901, 5)],
+        "_op string, k bigint, v bigint",
+    ).coalesce(1).write.parquet(feed)
+    stream = spark.readStream.schema(spark.read.parquet(feed).schema).parquet(
+        feed
+    )
+    state = str(tmp_path / "state")
+    real_parquet = DataFrameWriter.parquet
+
+    def failing_parquet(self, path, *a, **kw):
+        name = os.path.basename(path)
+        if name.startswith("epoch") and name != "epoch0":
+            raise OSError("injected compaction write failure")
+        return real_parquet(self, path, *a, **kw)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", failing_parquet)
+    release_scratch()
+    spark.catalog.clearCache()
+    with pytest.raises(OSError, match="injected"):
+        ST.apply_delta_stream(
+            stream, base, ["k"], ["v"], state_dir=state, n_buckets=8
+        )
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

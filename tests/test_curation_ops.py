@@ -498,9 +498,10 @@ def test_bloom_mask_memo_builds_once_per_benchmark(spark, monkeypatch):
         import pytest
 
         pytest.skip("driver parquet fixtures not available")
+    from checkatron_spark import model_cache
     from checkatron_spark import pipelines as P
 
-    P._BLOOM_MASK_CACHE.clear()
+    monkeypatch.setattr(model_cache, "_MEMORY", {})
     calls = {"n": 0}
     real = P.D.bloom_mask_words
 

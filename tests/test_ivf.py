@@ -155,9 +155,10 @@ def test_quantizer_disk_cache_roundtrip(spark, tmp_path, monkeypatch):
 
     from pyspark.sql import functions as F
 
+    from checkatron_spark import model_cache
     from checkatron_spark.operators import similarity as S
 
-    monkeypatch.setattr(S, "_IVF_CACHE_ROOT", str(tmp_path))
+    monkeypatch.setattr(model_cache, "ROOT", str(tmp_path))
     vecs = spark.range(200).select(
         F.col("id").alias("vec_id"),
         F.array(
@@ -200,9 +201,10 @@ def test_quantizer_cache_rejects_planted_mismatch(spark, tmp_path, monkeypatch):
 
     from pyspark.sql import functions as F
 
+    from checkatron_spark import model_cache
     from checkatron_spark.operators import similarity as S
 
-    monkeypatch.setattr(S, "_IVF_CACHE_ROOT", str(tmp_path))
+    monkeypatch.setattr(model_cache, "ROOT", str(tmp_path))
     vecs = spark.range(200).select(
         F.col("id").alias("vec_id"),
         F.array(
@@ -217,7 +219,9 @@ def test_quantizer_cache_rejects_planted_mismatch(spark, tmp_path, monkeypatch):
         os.listdir(os.path.join(str(tmp_path), "ivf_quantizer"))[0],
     )
     # plant the k=3 model at the path the k=4 fit would use
-    k4_path = S._ivf_cache_path("k1", 4, 42, 5, None)
+    k4_path = model_cache.entry(
+        model_cache.IVF_QUANTIZER, "k1", "kmeans", (4, 42, 5, None)
+    )
     os.makedirs(os.path.dirname(k4_path), exist_ok=True)
     shutil.copytree(k3_dir, k4_path)
     m = S.fit_ivf_quantizer(vecs, n_cells=4, seed=42, cache_key="k1")
@@ -282,3 +286,30 @@ def test_ivf_grid_full_probe_equals_bruteforce_ranks(spark):
         assert (r.query_id, r.neighbor_id, r.ivf_dist) in {
             (b.query_id, b.neighbor_id, b.d) for b in brute
         } or (r.query_id, r.neighbor_id, r.ivf_dist) in full_pairs
+
+
+def test_clear_refits_memoized_quantizer(spark, tmp_path, monkeypatch):
+    """model_cache.clear() drops the in-process tier as well as the disk
+    tier: a repeat q_ann_ivf fits nothing, but the first call after
+    clear() runs KMeans.fit again (the cold-fit bench rows rely on it)."""
+    from pyspark.ml.clustering import KMeans
+
+    from checkatron_spark import model_cache
+    from checkatron_spark import pipelines as P
+
+    monkeypatch.setattr(model_cache, "ROOT", str(tmp_path))
+    fits = {"n": 0}
+    real_fit = KMeans.fit
+
+    def counted_fit(self, *a, **kw):
+        fits["n"] += 1
+        return real_fit(self, *a, **kw)
+
+    monkeypatch.setattr(KMeans, "fit", counted_fit)
+    P.q_ann_ivf(spark, SF_DIR)  # warm both tiers
+    warm = fits["n"]
+    P.q_ann_ivf(spark, SF_DIR)
+    assert fits["n"] == warm, "a warm call must not refit"
+    model_cache.clear()
+    P.q_ann_ivf(spark, SF_DIR)
+    assert fits["n"] == warm + 1, "the first call after clear() must refit"

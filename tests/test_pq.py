@@ -191,9 +191,10 @@ def test_pq_codebook_disk_cache(spark, tmp_path, monkeypatch):
     shape."""
     import json
 
+    from checkatron_spark import model_cache
     from checkatron_spark.operators import pq as pqmod
 
-    monkeypatch.setattr(pqmod, "_PQ_CACHE_ROOT", str(tmp_path))
+    monkeypatch.setattr(model_cache, "ROOT", str(tmp_path))
     emb = _vecs(spark, _clustered_rows(n=60))
     cold = fit_pq_codebooks(emb, m=2, k=4, iters=2, cache_key="corpus-v1")
     cached = [p for p in (tmp_path / "pq_codebooks").iterdir()]
@@ -238,22 +239,25 @@ def test_cache_root_trust_checks(tmp_path, monkeypatch):
     never silently pointed at a plantable location."""
     import os
 
-    from checkatron_spark.operators import pq as pqmod
-    from checkatron_spark.session import secure_cache_root
+    from checkatron_spark import model_cache
+
+    def secure_cache_root(path: str) -> str | None:
+        monkeypatch.setattr(model_cache, "ROOT", path)
+        return model_cache.root()
 
     good = tmp_path / "root"
     good.mkdir(mode=0o700)
     assert secure_cache_root(str(good)) == str(good)
-    monkeypatch.setattr(pqmod, "_PQ_CACHE_ROOT", str(good))
-    assert pqmod._books_cache_path("k", "pq", (1,)) is not None
+    monkeypatch.setattr(model_cache, "ROOT", str(good))
+    assert model_cache.entry(model_cache.PQ_BOOKS, "k", "pq", (1,)) is not None
 
     # group/other-writable root (the classic pre-created /tmp plant)
     loose = tmp_path / "loose"
     loose.mkdir(mode=0o777)
     os.chmod(loose, 0o777)  # mkdir is umask-masked; force the loose bits
     assert secure_cache_root(str(loose)) is None
-    monkeypatch.setattr(pqmod, "_PQ_CACHE_ROOT", str(loose))
-    assert pqmod._books_cache_path("k", "pq", (1,)) is None
+    monkeypatch.setattr(model_cache, "ROOT", str(loose))
+    assert model_cache.entry(model_cache.PQ_BOOKS, "k", "pq", (1,)) is None
 
     # a symlink planted at the root path
     link = tmp_path / "link"
@@ -272,19 +276,92 @@ def test_cache_root_trust_checks(tmp_path, monkeypatch):
 
     # fit with an untrusted root still WORKS — it just refits every time
     # (cache best-effort contract); exercised via the IVF path too
-    from checkatron_spark.operators import similarity as S
+    monkeypatch.setattr(model_cache, "ROOT", str(loose))
+    assert model_cache.entry(
+        model_cache.IVF_QUANTIZER, "k", "kmeans", (4, 42, 5, None)
+    ) is None
 
-    monkeypatch.setattr(S, "_IVF_CACHE_ROOT", str(loose))
-    assert S._ivf_cache_path("k", 4, 42, 5, None) is None
+
+def test_clear_forces_refit_of_every_disk_family(spark, tmp_path, monkeypatch):
+    """After model_cache.clear() the next call is COLD for every disk
+    family: flat-PQ books, IVF-PQ coarse + residual books and the IVF
+    index store each pay their fit again — counted at the
+    fit_codebooks_grid and assignment-kernel seams."""
+    from checkatron_spark import model_cache
+    from checkatron_spark.operators import pq as pqmod
+
+    monkeypatch.setattr(model_cache, "ROOT", str(tmp_path))
+    calls = {"fit": 0, "assign": 0}
+    fit, assign = pqmod.fit_codebooks_grid, pqmod._assign_residual_grid
+
+    def counted_fit(*a, **kw):
+        calls["fit"] += 1
+        return fit(*a, **kw)
+
+    def counted_assign(*a, **kw):
+        calls["assign"] += 1
+        return assign(*a, **kw)
+
+    monkeypatch.setattr(pqmod, "fit_codebooks_grid", counted_fit)
+    monkeypatch.setattr(pqmod, "_assign_residual_grid", counted_assign)
+    rows = [r for r in _clustered_rows() if r[1] is not None
+            and all(v is not None for v in r[1]) and any(r[1])]
+    emb = _vecs(spark, rows)
+    queries = emb.filter(F.col("vec_id") % 40 == 0)
+    no_changes = emb.filter(F.col("vec_id") < 0).select(
+        F.lit("upsert").alias("op"), "vec_id", "embedding"
+    )
+    kw = dict(iters=2, fit_sample=40, cache_key="corpus-v1")
+    families = {
+        "pq": lambda: fit_pq_codebooks(emb, m=2, k=4, **kw),
+        "ivfpq": lambda: pqmod.ivfpq_topk(
+            emb, queries, n_cells=4, n_probe=2, m=2, k=4, topk=3, **kw
+        ),
+        "index": lambda: pqmod.ivf_grid_apply_changes(
+            emb, no_changes, n_cells=4, **kw
+        ),
+    }
+
+    def cost(call) -> tuple[int, int]:
+        before = dict(calls)
+        call()
+        return calls["fit"] - before["fit"], calls["assign"] - before["assign"]
+
+    for call in families.values():
+        call()  # fill every family
+    warm = {name: cost(call) for name, call in families.items()}
+    model_cache.clear()
+    cold = {name: cost(call) for name, call in families.items()}
+    # (fits, assignment-kernel builds); ivfpq always builds its residual
+    # assignment and the index admission its upsert assignment
+    assert warm == {"pq": (0, 0), "ivfpq": (0, 1), "index": (0, 1)}
+    # ivfpq refits coarse + residual books; the index store rebuilds its
+    # base assignment (its coarse slot is shared with ivfpq, warm again)
+    assert cold == {"pq": (1, 0), "ivfpq": (2, 1), "index": (0, 2)}
+
+
+def test_ivf_injection_needs_index_and_coarse_together(spark):
+    """Injecting only one of index= / coarse= raises instead of being
+    silently discarded for a refit."""
+    import checkatron_spark.operators.pq as P
+
+    emb = _vecs(spark, _clustered_rows())
+    queries = emb.filter(F.col("vec_id") % 50 == 0)
+    index, coarse = P.ivf_grid_index(emb, n_cells=4, iters=2, fit_sample=64)
+    for search, kw in ((P.ivfpq_topk, dict(m=2, k=4)), (P.ivf_grid_topk, {})):
+        for one in (dict(index=index), dict(coarse=coarse)):
+            with pytest.raises(ValueError, match="together"):
+                search(emb, queries, n_cells=4, n_probe=2, **kw, **one)
 
 
 def test_ivfpq_cache_hit_equals_refit(spark, tmp_path, monkeypatch):
     """IVF-PQ with a warm coarse+residual codebook cache returns the
     identical ranking a cold fit computes (fit is deterministic, so the
     cache IS the refit — job-free)."""
+    from checkatron_spark import model_cache
     from checkatron_spark.operators import pq as pqmod
 
-    monkeypatch.setattr(pqmod, "_PQ_CACHE_ROOT", str(tmp_path))
+    monkeypatch.setattr(model_cache, "ROOT", str(tmp_path))
     rows = [r for r in _clustered_rows() if r[1] is not None
             and all(v is not None for v in r[1]) and any(r[1])]
     emb = _vecs(spark, rows)
@@ -576,9 +653,10 @@ def test_ivf_index_store_hit_equals_rebuild(spark, tmp_path, monkeypatch):
 
     from pyspark.sql import functions as F
 
+    from checkatron_spark import model_cache
     from checkatron_spark.operators import pq as pqmod
 
-    monkeypatch.setattr(pqmod, "_PQ_CACHE_ROOT", str(tmp_path))
+    monkeypatch.setattr(model_cache, "ROOT", str(tmp_path))
     vecs = spark.range(150).select(
         F.col("id").alias("vec_id"),
         F.array(
@@ -699,8 +777,9 @@ def test_r14_shared_index_equivalences(spark, tmp_path, monkeypatch):
     self-building paths return — including the residual derivation
     zip_with(_x, centroid[cell], a - b) vs the kernel's X - cents[cell]."""
     import checkatron_spark.operators.pq as P
+    from checkatron_spark import model_cache
 
-    monkeypatch.setattr(P, "_PQ_CACHE_ROOT", str(tmp_path))
+    monkeypatch.setattr(model_cache, "ROOT", str(tmp_path))
     rows = _clustered_rows()
     emb = _vecs(spark, rows)
     queries = emb.filter(F.col("vec_id") % 50 == 0)

@@ -1,19 +1,22 @@
-"""Round-15 optimization probe: same-session min-of-N timings + plan dumps.
+"""Same-session min-of-N query timings, plan dumps and build-only timing.
 
-Same method as tools/probe_r14.py (cross-bench totals swing ±15-17%
-between host epochs — SCALE.md — so per-change evidence is one JVM timing
-the queries under test back to back), plus a ``--build-only`` mode that
-times DataFrame CONSTRUCTION alone (no action): round 14 measured ~2 s of
-driver-side Catalyst/py4j work building ann_recall_audit's 6-subtree
-union, and this round's item #1 needs that number tracked separately from
-execution.
+Cross-bench totals swing ±15-17% between host epochs (SCALE.md), so
+per-change evidence comes from ONE JVM timing the queries under test back
+to back (min-of-N each), not from comparing two full bench runs.
+``--build-only`` times DataFrame construction alone (no action): the
+driver-side Catalyst/py4j cost of building a query, tracked separately
+from execution.
 
 Usage:
-  python tools/probe_r15.py q1 q2 ...            # min-of-4 timings
-  python tools/probe_r15.py --runs 6 q1 q2
-  python tools/probe_r15.py --explain q1 q2      # dump plans/r15/<q>_<tag>.txt
-  python tools/probe_r15.py --tag before --explain q1
-  python tools/probe_r15.py --build-only q1      # construction time only
+  python tools/probe.py q1 q2 ...                  # min-of-4 timings
+  python tools/probe.py --runs 6 q1 q2
+  python tools/probe.py --explain plans/new q1 q2  # dump plans/new/<q>_<tag>.txt
+  python tools/probe.py --tag before --explain plans/new q1
+  python tools/probe.py --build-only q1            # construction time only
+
+Timings go to stdout as one JSON line per query (and a plain table on
+stderr). The noop sink forces every column of every row, same methodology
+as bench.py.
 """
 
 from __future__ import annotations
@@ -40,13 +43,14 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("queries", nargs="+")
     ap.add_argument("--runs", type=int, default=4)
-    ap.add_argument("--explain", action="store_true")
+    ap.add_argument("--explain", metavar="DIR",
+                    help="dump each query's formatted plan into DIR")
     ap.add_argument("--build-only", action="store_true")
     ap.add_argument("--tag", default="probe")
     ap.add_argument("--no-warm", action="store_true")
     args = ap.parse_args()
 
-    spark = get_spark("probe-r15")
+    spark = get_spark("probe")
     spark.sparkContext.setLogLevel("ERROR")
     qs = entrymod._queries_unordered()
     missing = [q for q in args.queries if q not in qs]
@@ -58,18 +62,15 @@ def main() -> None:
             if warm in qs:
                 _force(qs[warm](spark, SF_DIR))
 
-    here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    plans_dir = os.path.join(here, "plans", "r15")
-
     for name in args.queries:
         release_scratch()
         if args.explain:
-            os.makedirs(plans_dir, exist_ok=True)
+            os.makedirs(args.explain, exist_ok=True)
             df = qs[name](spark, SF_DIR)
             txt = df._sc._jvm.PythonSQLUtils.explainString(
                 df._jdf.queryExecution(), "formatted"
             )
-            out = os.path.join(plans_dir, f"{name}_{args.tag}.txt")
+            out = os.path.join(args.explain, f"{name}_{args.tag}.txt")
             with open(out, "w") as fh:
                 fh.write(txt)
             print(f"[probe] plan -> {out}", file=sys.stderr)
@@ -77,7 +78,8 @@ def main() -> None:
         spark.sparkContext.setJobDescription(f"probe:{name}")
         runs = []
         for _ in range(args.runs):
-            release_scratch() if args.build_only else None
+            if args.build_only:
+                release_scratch()
             t0 = time.perf_counter()
             df = qs[name](spark, SF_DIR)
             build = round(time.perf_counter() - t0, 3)
