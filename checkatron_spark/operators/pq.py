@@ -12,17 +12,18 @@ distances is built once (m·k entries), and every corpus vector's distance is
 m table lookups — no float math per candidate.
 
 Exact-arithmetic formulation (the oracle-checkable twin of MLlib-style
-float PQ, same design as operators/kmeans.py): vectors quantize once to a
-BIGINT grid, per-subspace Lloyd runs the integer argmin with the
-``min(dist·k + cid)`` encoding and deterministic lowest-id seeding, and ADC
-scores are exact BIGINT sums — every code and every distance reproduces
-bit-for-bit in ANSI SQL (unrolled per-subspace CTE chains), so the DuckDB
-oracle grades the whole index+search pipeline, not a recall proxy.
+float PQ): vectors quantize once to the BIGINT grid, the codebooks are the
+exact-integer Lloyd of operators/kmeans.py run over ``m`` subspace slices
+(integer ``min(dist·k + cid)`` argmin, deterministic lowest-id seeding),
+and ADC scores are exact BIGINT sums — every code and every distance
+reproduces bit-for-bit in ANSI SQL (unrolled per-subspace CTE chains), so
+the DuckDB oracle grades the whole index+search pipeline, not a recall
+proxy.
 
 Scale shape:
-- fit: per subspace per iteration, one map-side-combined (cluster, dim)
-  groupBy; the codebooks are m·k·(dims/m) integers on the driver — the
-  same bounded-collect contract as the kmeans centroid loop. At corpus
+- fit: per iteration, one assignment pass over all m subspaces and one
+  map-side-combined (subspace, code, dim) groupBy; the codebooks are
+  m·k·(dims/m) integers on the driver — the same loop as k-means. At corpus
   scale the fit input is a BOUNDED deterministic sample (``fit_sample``
   — the FAISS discipline: codebooks train on ~1e5 vectors, never the
   corpus), and the fitted codebooks PERSIST in the model cache keyed by
@@ -52,6 +53,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from checkatron_spark import model_cache
+from checkatron_spark.operators.kmeans import grid, lloyd, nearest
 from checkatron_spark.operators.similarity import topk_two_phase
 
 __all__ = [
@@ -79,33 +81,19 @@ def _quantized(df: DataFrame, id_col: str, vec_col: str, scale: int):
         f"sqrt(aggregate({vec_col}, 0.0D, "
         "(acc, v) -> acc + CAST(v AS DOUBLE) * CAST(v AS DOUBLE)))"
     )
-    grid = F.expr(
-        f"transform({vec_col}, v -> "
-        f"CAST(floor(CAST(v AS DOUBLE) * {scale}.0 + 0.5) AS BIGINT))"
-    )
     return (
         df.filter(norm > F.lit(0.0))
-        .select(F.col(id_col), grid.alias("_x"))
+        .select(F.col(id_col), grid(vec_col, scale).alias("_x"))
     )
-
-
-def _subspace_bounds(dims: int, m: int) -> list[tuple[int, int]]:
-    if dims % m:
-        raise ValueError(
-            f"pq: dims ({dims}) must divide evenly into m={m} subspaces"
-        )
-    sub = dims // m
-    return [(s * sub + 1, sub) for s in range(m)]  # (1-based lo, length)
 
 
 def _grid_stats(xq: DataFrame, k: int) -> int:
-    """Dims + safety gates in ONE bounded aggregate job (replaces the
-    round-12 ``select(size).distinct()`` full extra scan): ragged
+    """Dims + safety gates in ONE bounded aggregate job: ragged
     dimensions fail fast (mixed-dim codes would silently mis-rank), and
     the BIGINT ``min(dist·k + cid)`` argmin encoding is bounds-checked at
     FIT time — Spark's non-ANSI arithmetic would wrap silently on
     large-magnitude grids, producing garbage codebooks long before the
-    encode kernel's own guard fires (ADVICE r12). The residual stage
+    encode kernel's own guard fires. The residual stage
     doubles magnitudes (x − centroid, then vs residual centroids), so the
     guard uses 4·amax per difference term — conservative for flat PQ,
     exact for IVF-PQ's worst case."""
@@ -209,8 +197,8 @@ def fit_pq_codebooks(
     fit_sample: int | None = None,
     cache_key: str | None = None,
 ) -> list[list[list[int]]]:
-    """Train the m per-subspace codebooks (exact integer Lloyd, same grid
-    and rules as operators/kmeans.py: lowest-id seeding, min(dist·k+cid)
+    """Train the m per-subspace codebooks (the exact integer Lloyd of
+    operators/kmeans.py over m slices: lowest-id seeding, min(dist·k+cid)
     argmin, one IEEE division + floor(+0.5) per re-quantized component,
     emptied clusters keep their previous centroid). Returns
     ``codebooks[s][cid] -> list[int]`` of length dims/m.
@@ -246,97 +234,41 @@ def fit_codebooks_grid(
     """The grid-input fit: ``xq`` is (id_col, _x array<bigint>) already on
     the BIGINT grid — the seam that lets IVF-PQ train codebooks over
     RESIDUAL vectors (x − coarse centroid), which are grid integers by
-    construction and must NOT be re-quantized."""
+    construction and must NOT be re-quantized. The fit itself is the
+    shared exact Lloyd over ``m`` subspace slices (kmeans.lloyd)."""
     from checkatron_spark.session import scratch_persist
 
     xq = xq.transform(scratch_persist)
     dims = _grid_stats(xq, k)
-    bounds = _subspace_bounds(dims, m)
-    seed_rows = xq.orderBy(F.col(id_col).asc()).limit(k).collect()
-    if len(seed_rows) < k:
+    if dims % m:
+        raise ValueError(
+            f"pq: dims ({dims}) must divide evenly into m={m} subspaces"
+        )
+    books = lloyd(xq, id_col=id_col, k=k, iters=iters, m=m)
+    if len(books[0]) < k:
         raise ValueError(
             f"pq: need at least k={k} non-degenerate vectors to seed"
         )
-    codebooks: list[list[list[int]]] = []
-    for lo, sub in bounds:
-        cents = [list(r._x[lo - 1 : lo - 1 + sub]) for r in seed_rows]
-        sx = xq.select(id_col, F.expr(f"slice(_x, {lo}, {sub})").alias("_s"))
-        for it in range(iters - 1):
-            assigned = _argmin_code(sx, "_s", cents, k)
-            refit = (
-                assigned.select(
-                    "_code", F.posexplode("_s").alias("_j", "_v")
-                )
-                .groupBy("_code", "_j")
-                .agg(F.sum("_v").alias("_sum"), F.count(F.lit(1)).alias("_n"))
-                .select(
-                    "_code",
-                    "_j",
-                    F.expr(
-                        "CAST(floor(CAST(_sum AS DOUBLE) / "
-                        "CAST(_n AS DOUBLE) + 0.5) AS BIGINT)"
-                    ).alias("_m"),
-                )
-                .collect()
-            )
-            by_cid: dict[int, dict[int, int]] = {}
-            for r in refit:
-                by_cid.setdefault(r._code, {})[r._j] = r._m
-            cents = [
-                [by_cid[cid][j] for j in range(sub)]
-                if cid in by_cid
-                else prev
-                for cid, prev in enumerate(cents)
-            ]
-        codebooks.append(cents)
-    return codebooks
-
-
-def _argmin_code(sx: DataFrame, col: str, cents: list, k: int) -> DataFrame:
-    """Nearest-centroid code for one subspace via the integer
-    min(dist·k + cid) encoding over centroid literals (broadcast shape —
-    k rows ride the plan; exact BIGINT grid arithmetic)."""
-    spark = sx.sparkSession
-    cdf = spark.createDataFrame(
-        list(enumerate(cents)), "cid int, _m array<bigint>"
-    )
-    dist = F.expr(
-        "aggregate(zip_with(" + col + ", _m, (a, b) -> (a - b) * (a - b)), "
-        "0L, (acc, v) -> acc + v)"
-    )
-    return (
-        sx.join(F.broadcast(cdf))
-        .select(*sx.columns, (dist * k + F.col("cid")).alias("_key"))
-        .groupBy(*sx.columns)
-        .agg(F.min("_key").alias("_key"))
-        .select(
-            *sx.columns,
-            (F.col("_key") % k).cast("int").alias("_code"),
-        )
-    )
+    return books
 
 
 def _assign_residual_grid(
     xq: DataFrame, coarse: list[list[int]], *, id_col: str = "vec_id",
     residual: bool = True,
 ) -> DataFrame:
-    """Coarse-cell assignment + residual computation in ONE Arrow pass
-    (round 13): the previous shape — broadcast centroid fan-out, then a
-    corpus x n_cells groupBy ARGMIN keyed on (id, full vector array) —
-    shuffled every vector n_cells times; this kernel does the identical
-    integer ``min(dist·k + cid)`` argmin (the _argmin_code rule, numpy
-    int64 exact) map-side with the centroids in the task closure, and
-    emits (id, cell, residual) with zero shuffles and zero joins. Same
-    BIGINT overflow guard as pq_encode_grid. ``residual=False`` emits the
-    ORIGINAL grid vector instead of the residual — the grid-IVF seam
-    (round 14: ivf_grid_topk scores probed cells on full vectors, so
-    re-joining xq for them would add a corpus-sized shuffle the kernel
-    can avoid for free)."""
+    """Coarse-cell assignment + residual computation in ONE Arrow pass:
+    the exact integer argmin (kmeans.nearest, one full-width slice) runs
+    map-side with the centroids in the task closure, emitting (id, cell,
+    residual) with zero shuffles and zero joins — a broadcast centroid
+    fan-out plus a groupBy argmin keyed on (id, vector) would shuffle every
+    vector n_cells times. ``residual=False`` emits the ORIGINAL grid vector
+    instead of the residual — the grid-IVF seam (ivf_grid_topk scores
+    probed cells on full vectors, so re-joining xq for them would add a
+    corpus-sized shuffle the kernel avoids for free)."""
     import numpy as np
     import pandas as pd
 
     cents = np.array(coarse, dtype=np.int64)  # (n_cells, dims)
-    k = len(coarse)
     id_type = dict(xq.dtypes)[id_col]
 
     def kernel(batches):
@@ -355,15 +287,7 @@ def _assign_residual_grid(
                     f"ivfpq: vector dims {X.shape[1]} != coarse centroid "
                     f"dims {cents.shape[1]}"
                 )
-            amax = max(int(np.abs(X).max(initial=0)),
-                       int(np.abs(cents).max(initial=0)))
-            if X.shape[1] * (2 * amax) ** 2 >= (2**63 - 1) // max(k, 1):
-                raise ValueError(
-                    "ivfpq: BIGINT grid bound exceeded — lower `scale`"
-                )
-            diff = X[:, None, :] - cents[None, :, :]
-            key = np.einsum("nkd,nkd->nk", diff, diff) * k + np.arange(k)
-            cell = (key.min(axis=1) % k).astype(np.int32)
+            cell = nearest(X, cents[None])[0][:, 0]
             yield pd.DataFrame(
                 {
                     id_col: pdf[id_col],
@@ -404,15 +328,13 @@ def pq_encode_grid(
     seam for IVF-PQ (see :func:`fit_codebooks_grid`). ``passthrough``
     columns (e.g. the IVF cell id) are repeated per subspace and carried
     through the kernel, so consumers that need them avoid a corpus-sized
-    join back onto the encode output (guide §2.4: a few bytes per Arrow
-    row instead of a shuffle)."""
+    join back onto the encode output (a few bytes per Arrow row instead
+    of a shuffle)."""
     import numpy as np
     import pandas as pd
 
-    m = len(codebooks)
-    k = len(codebooks[0])
-    sub = len(codebooks[0][0])
     cents = np.array(codebooks, dtype=np.int64)  # (m, k, sub)
+    m, _, sub = cents.shape
     dtypes = dict(xq.dtypes)
     id_type = dtypes[id_col]
 
@@ -432,21 +354,10 @@ def pq_encode_grid(
                     f"pq_encode: vector dims {X.shape[1]} != codebook "
                     f"dims {m * sub}"
                 )
-            amax = max(int(np.abs(X).max(initial=0)),
-                       int(np.abs(cents).max(initial=0)))
-            if sub * (2 * amax) ** 2 >= (2**63 - 1) // max(k, 1):
-                raise ValueError(
-                    "pq_encode: BIGINT grid bound exceeded — lower `scale`"
-                )
             n = len(X)
             ids = np.repeat(np.asarray(pdf[id_col]), m)
             ss = np.tile(np.arange(m, dtype=np.int32), n)
-            codes = np.empty((n, m), dtype=np.int32)
-            for s in range(m):
-                Xs = X[:, s * sub : (s + 1) * sub]
-                diff = Xs[:, None, :] - cents[s][None, :, :]
-                key = np.einsum("nkd,nkd->nk", diff, diff) * k + np.arange(k)
-                codes[:, s] = (key.min(axis=1) % k).astype(np.int32)
+            codes = nearest(X, cents)[0]
             out = {id_col: ids, "s": ss, "code": codes.reshape(-1)}
             for c in passthrough:
                 out[c] = np.repeat(np.asarray(pdf[c]), m)
@@ -511,8 +422,8 @@ def pq_adc_topk(
     cdf = qx.sparkSession.createDataFrame(
         flat, "s int, code int, _m array<bigint>"
     )
-    # broadcast pinned, not AQE-inherited (VERDICT r12 defect #2): cdf is
-    # m*k rows — the same hint its sibling fan-outs (ivfpq_topk) carry
+    # broadcast pinned, not AQE-inherited: cdf is m*k rows — the same
+    # hint its sibling fan-outs (ivfpq_topk) carry
     qd = (
         qx.crossJoin(F.broadcast(cdf))
         .select(
@@ -584,7 +495,7 @@ def rerank_exact(
     topk: int = 3,
 ) -> DataFrame:
     """The exact-refine stage of :func:`pq_adc_rerank_topk`, factored out
-    (round 14) so a caller that ALREADY has the ADC shortlist — the
+    so a caller that ALREADY has the ADC shortlist — the
     recall audit runs the flat-PQ pipeline once at topk=shortlist and
     prefixes it for both ADC rows — can re-rank without recomputing the
     whole compressed search. ``short`` = (query_id, neighbor_id)
@@ -637,8 +548,8 @@ def _fit_coarse_cached(
     against the corpus): the warm search/admission paths deliberately do
     NOT run the corpus-wide _grid_stats pass, because the assignment
     kernel re-validates dims and the BIGINT bound on every batch at
-    execution time (guide §1.2: don't spend a full corpus scan on a
-    guard the hot loop already enforces). A cache MISS still pays the
+    execution time (a full corpus scan would only repeat a guard the
+    hot loop already enforces). A cache MISS still pays the
     corpus-wide stats guard before fitting — garbage codebooks must fail
     at fit time, not at first use."""
     cpath = model_cache.entry(
@@ -693,8 +604,8 @@ def ivf_grid_index(
 ) -> tuple[DataFrame, list[list[int]]]:
     """The corpus half of grid IVF — (index, coarse) where index =
     (id_col, cell, _x ORIGINAL grid vector) from the zero-shuffle
-    assignment kernel under the (cached) coarse quantizer. Factored out
-    (round 14) so one build can serve several consumers: ivf_grid_topk's
+    assignment kernel under the (cached) coarse quantizer. Separate so
+    one build can serve several consumers: ivf_grid_topk's
     scoring join uses it directly, and ivfpq_topk can derive its residuals
     from it (x − centroid[cell], exact BIGINT zip_with — identical to the
     kernel's arithmetic, pinned in tests/test_pq.py). The recall audit
@@ -727,8 +638,8 @@ def ivf_grid_topk(
     """Grid-integer IVF top-k — the APPROXIMATE inverted-file search a
     user reaches for first, exact-arithmetic twin of
     the MLlib-backed ``similarity.ivf_topk`` but fully replayable in the
-    DuckDB oracle: the coarse quantizer is this module's deterministic
-    m=1 Lloyd chain (md5-bounded fitset, disk-cached — the slot is
+    DuckDB oracle: the coarse quantizer is the deterministic m=1 Lloyd
+    chain (fit_codebooks_grid; md5-bounded fitset, disk-cached — the slot is
     SHARED with ivfpq_topk's coarse stage), each query probes its
     ``n_probe`` closest cells by exact BIGINT centroid distance, and
     candidates in probed cells are ranked by the exact full-vector grid
@@ -772,8 +683,8 @@ def _ivf_grid_search(
 ) -> DataFrame:
     """The search half of grid IVF over a MAINTAINED index frame
     ``corpus`` = (neighbor_id, cell, _x) — shared by ivf_grid_topk
-    (fresh build) and ivf_grid_apply_changes (incremental admission,
-    round 14): probe table broadcast, scoring join keyed on cell,
+    (fresh build) and ivf_grid_apply_changes (incremental admission):
+    probe table broadcast, scoring join keyed on cell,
     two-phase per-query top-k."""
     spark = corpus.sparkSession
     cdf = spark.createDataFrame(
@@ -882,15 +793,28 @@ def ivfpq_topk(
         xq = xq.transform(scratch_persist)  # fitset + assignment consumers
     if index is not None and books is not None:
         # residuals from the shared index: exact x − centroid[cell] via a
-        # broadcast of the n_cells-row centroid table + codegen zip_with
+        # broadcast of the n_cells-row centroid table + codegen zip_with.
+        # zip_with pads a width mismatch with NULLs, so a wrong-width
+        # index fails here, lazily, naming both widths
         spark = xq.sparkSession
         cdf0 = spark.createDataFrame(
             list(enumerate(coarse)), "cell int, _cm array<bigint>"
         )
+        width = F.size("_x")
         res = index.join(F.broadcast(cdf0), "cell").select(
             id_col,
             "cell",
-            F.expr("zip_with(_x, _cm, (a, b) -> a - b)").alias("_x"),
+            F.when(
+                width != dims,
+                F.raise_error(F.concat(
+                    F.lit("ivfpq: injected index vectors have "),
+                    width.cast("string"),
+                    F.lit(f" dims but the coarse centroids have {dims}"
+                          " — build index and coarse together"),
+                )),
+            ).otherwise(
+                F.expr("zip_with(_x, _cm, (a, b) -> a - b)")
+            ).alias("_x"),
         )
     else:
         # assignment + residuals in one zero-shuffle Arrow pass
@@ -1112,7 +1036,7 @@ def ivf_occupancy_drift(
     empty_threshold: float = 0.25,
 ) -> dict:
     """Cell-occupancy drift audit — the refit trigger for incremental
-    admission (VERDICT r13 #5): after K batches, if the most-loaded
+    admission: after K batches, if the most-loaded
     cell holds more than ``skew_threshold`` times its uniform share, or
     more than ``empty_threshold`` of the cells have emptied, the fitted
     centroids no longer describe the corpus and probed-cell search
@@ -1143,7 +1067,7 @@ def coarse_assign_expr(coarse: list[list[int]], xcol: str = "_x") -> F.Column:
     """Pure-codegen coarse-cell assignment over grid vectors — the
     centroid-LITERAL twin of _assign_residual_grid's Arrow argmin
     (identical ``min(dist·k + cid)`` integer rule, pinned equivalent in
-    tests/test_pq.py). Exists for STREAMING admission (round 14): a
+    tests/test_pq.py). Exists for STREAMING admission: a
     stateless projection needs no Python workers and no mapInPandas
     stage, so a micro-batch assigns cells at ingest speed with the
     centroids riding the plan as literals."""

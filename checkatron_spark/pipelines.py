@@ -3243,16 +3243,15 @@ WHERE rnk <= {topk}
 def q_ann_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall@k audit of every compressed-index ANN path against the
     exact brute-force ground truth at matched k=3 — the method-audit twin
-    of neardup_method_audit (VERDICT r12 #3): the measurement a real user
-    needs to pick n_probe/m/k before trusting a compressed index
-    corpus-wide. hits/total are exact integers (pair-set intersections of
-    deterministic rankings), so the whole audit replays bit-for-bit in
-    the composed DuckDB oracle; recall_at_k is one IEEE division of two
-    exact integers, rounded at 1e-6. All six methods (round 14 adds
-    ann_ivf/ann_lsh — VERDICT r13 #2) reuse the disk-cached sampled-fit
-    codebooks/quantizers where they have one, so the audit costs one
-    brute-force scan plus six SEARCHES, not six index builds. Returns
-    one row per method: (method, hits, total, recall_at_k).
+    of neardup_method_audit: the measurement a real user needs to pick
+    n_probe/m/k before trusting a compressed index corpus-wide. hits/total
+    are exact integers (pair-set intersections of deterministic
+    rankings), so the whole audit replays bit-for-bit in the composed
+    DuckDB oracle; recall_at_k is one IEEE division of two exact
+    integers, rounded at 1e-6. All six methods reuse the disk-cached
+    sampled-fit codebooks/quantizers where they have one, so the audit
+    costs one brute-force scan plus six SEARCHES, not six index builds.
+    Returns one row per method: (method, hits, total, recall_at_k).
 
     Scale note (probe-battery exemption): the audit composes
     already-probed searches; its only non-probed term is the brute-force
@@ -3261,8 +3260,6 @@ def q_ann_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     set comes from an offline exact pass over a fixed query panel, and
     the audit's own join/aggregate work is ∝ the methods' top-k outputs,
     corpus-independent."""
-    from concurrent.futures import ThreadPoolExecutor
-
     from checkatron_spark.operators.pq import (
         _quantized,
         ivf_grid_index,
@@ -3286,105 +3283,88 @@ def q_ann_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # canonicalized equality, so ONE persist here turns three corpus
     # quantization passes into one compute + two cache reads. Raw `emb`
     # is deliberately NOT persisted: a second corpus-sized cache to save
-    # parquet re-scans that cost less than the cache (OPTIMIZATION_r15.md).
+    # parquet re-scans that cost less than the cache.
     scratch_persist(_quantized(emb, "vec_id", "embedding", 10000))
-    # materialize each shared frame EAGERLY and in the BACKGROUND,
-    # submitted the moment the frame is defined. persist() alone does not
-    # coordinate in-flight computation — the union job's two consumer
-    # branches per frame would race and compute every "shared" pipeline
-    # twice — and submitting during construction overlaps materialization
-    # with the remaining py4j plan building. The futures are awaited
-    # before returning so no consumer starts against a half-populated
-    # cache; the with-block joins the pool on every path, so a
-    # constructor that raises mid-build leaves no worker thread behind.
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        futs = []
-        bf = (
-            S.ann_bruteforce_topk(emb, queries, k=3)
-            .select("query_id", "neighbor_id")
-            .transform(scratch_persist)  # consumed twice: hits join + total
+    bf = (
+        S.ann_bruteforce_topk(emb, queries, k=3)
+        .select("query_id", "neighbor_id")
+        .transform(scratch_persist)  # consumed twice: hits join + total
+    )
+    # ann_pq_adc and ann_pq_rerank share ONE flat-PQ pipeline — the ADC
+    # ranking at topk=shortlist(10) is computed once and persisted; its
+    # rank<=3 prefix IS the ADC method's top-3 (identical deterministic
+    # total order (adc_dist, neighbor_id) — a topk filter is a prefix of
+    # the same row_number), and the full 10 rows are exactly the rerank
+    # stage's shortlist. Equality with the unshared operators is pinned
+    # in tests/test_pq.py.
+    adc10 = pq_adc_topk(
+        emb, queries, m=4, k=16, iters=2, scale=10000, topk=10,
+        fit_sample=256, cache_key=key,
+    ).select("query_id", "neighbor_id", "rank").transform(scratch_persist)
+    # the grid-IVF corpus index (assignment under the cached coarse
+    # quantizer) is built and persisted ONCE and feeds both ann_ivf
+    # (scoring join) and ann_ivfpq (residuals = x − centroid[cell], the
+    # identical exact arithmetic — pinned in tests/test_pq.py)
+    index, coarse = ivf_grid_index(
+        emb, n_cells=8, iters=2, scale=10000, fit_sample=256,
+        cache_key=key,
+    )
+    index = scratch_persist(index)
+    # ann_ivf and ann_lsh — the approximate methods a user reaches for
+    # first — join the audit via their deterministic twins (grid-IVF
+    # shares ann_ivfpq's cached coarse quantizer; banded LSH at the
+    # declared band_bits=5 point), covering all six compressed/bucketed
+    # paths
+    methods = {
+        "ann_hamming": ann_hamming_topk(emb, queries, k=3),
+        "ann_ivf": ivf_grid_topk(
+            emb, queries, n_cells=8, n_probe=2, iters=2, scale=10000,
+            topk=3, fit_sample=256, cache_key=key,
+            index=index, coarse=coarse,
+        ),
+        "ann_ivfpq": ivfpq_topk(
+            emb, queries, n_cells=8, n_probe=2, m=4, k=16, iters=2,
+            scale=10000, topk=3, fit_sample=256, cache_key=key,
+            index=index, coarse=coarse,
+        ),
+        "ann_lsh": ann_lsh_banded_topk(
+            emb, queries, band_bits=5, k=3, scale=10000,
+        ),
+        "ann_pq_adc": adc10.filter(F.col("rank") <= 3),
+        "ann_pq_rerank": rerank_exact(
+            adc10.select("query_id", "neighbor_id"), emb, queries,
+            scale=10000, topk=3,
+        ),
+    }
+    labeled = None
+    for name in sorted(methods):
+        part = methods[name].select(
+            F.lit(name).alias("method"), "query_id", "neighbor_id"
         )
-        futs.append(pool.submit(bf.count))
-        # ann_pq_adc and ann_pq_rerank share ONE flat-PQ pipeline — the
-        # ADC ranking at topk=shortlist(10) is computed once and
-        # persisted; its rank<=3 prefix IS the ADC method's top-3
-        # (identical deterministic total order (adc_dist, neighbor_id) — a
-        # topk filter is a prefix of the same row_number), and the full
-        # 10 rows are exactly the rerank stage's shortlist. Equality with
-        # the unshared operators is pinned in tests/test_pq.py.
-        adc10 = pq_adc_topk(
-            emb, queries, m=4, k=16, iters=2, scale=10000, topk=10,
-            fit_sample=256, cache_key=key,
-        ).select("query_id", "neighbor_id", "rank").transform(scratch_persist)
-        futs.append(pool.submit(adc10.count))
-        # the grid-IVF corpus index (assignment under the cached coarse
-        # quantizer) is built and persisted ONCE and feeds both ann_ivf
-        # (scoring join) and ann_ivfpq (residuals = x − centroid[cell], the
-        # identical exact arithmetic — pinned in tests/test_pq.py)
-        index, coarse = ivf_grid_index(
-            emb, n_cells=8, iters=2, scale=10000, fit_sample=256,
-            cache_key=key,
+        labeled = part if labeled is None else labeled.unionAll(part)
+    hits = (
+        labeled.join(F.broadcast(bf), ["query_id", "neighbor_id"])
+        .groupBy("method")
+        .agg(F.count(F.lit(1)).alias("hits"))
+    )
+    names = spark.createDataFrame(
+        [(n,) for n in sorted(methods)], "method string"
+    )
+    tot = bf.agg(F.count(F.lit(1)).alias("total"))
+    h = F.coalesce(F.col("hits"), F.lit(0)).cast("bigint")
+    return (
+        names.join(hits, "method", "left")
+        .crossJoin(tot)  # 1-row scalar — broadcast-NL by construction
+        .select(
+            "method",
+            h.alias("hits"),
+            F.col("total").cast("bigint").alias("total"),
+            F.round(
+                h.cast("double") / F.col("total").cast("double"), 6
+            ).alias("recall_at_k"),
         )
-        index = scratch_persist(index)
-        futs.append(pool.submit(index.count))
-        # ann_ivf and ann_lsh — the approximate methods a user reaches
-        # for first — join the audit via their deterministic twins
-        # (grid-IVF shares ann_ivfpq's cached coarse quantizer; banded LSH
-        # at the declared band_bits=5 point), covering all six
-        # compressed/bucketed paths
-        methods = {
-            "ann_hamming": ann_hamming_topk(emb, queries, k=3),
-            "ann_ivf": ivf_grid_topk(
-                emb, queries, n_cells=8, n_probe=2, iters=2, scale=10000,
-                topk=3, fit_sample=256, cache_key=key,
-                index=index, coarse=coarse,
-            ),
-            "ann_ivfpq": ivfpq_topk(
-                emb, queries, n_cells=8, n_probe=2, m=4, k=16, iters=2,
-                scale=10000, topk=3, fit_sample=256, cache_key=key,
-                index=index, coarse=coarse,
-            ),
-            "ann_lsh": ann_lsh_banded_topk(
-                emb, queries, band_bits=5, k=3, scale=10000,
-            ),
-            "ann_pq_adc": adc10.filter(F.col("rank") <= 3),
-            "ann_pq_rerank": rerank_exact(
-                adc10.select("query_id", "neighbor_id"), emb, queries,
-                scale=10000, topk=3,
-            ),
-        }
-        labeled = None
-        for name in sorted(methods):
-            part = methods[name].select(
-                F.lit(name).alias("method"), "query_id", "neighbor_id"
-            )
-            labeled = part if labeled is None else labeled.unionAll(part)
-        hits = (
-            labeled.join(F.broadcast(bf), ["query_id", "neighbor_id"])
-            .groupBy("method")
-            .agg(F.count(F.lit(1)).alias("hits"))
-        )
-        names = spark.createDataFrame(
-            [(n,) for n in sorted(methods)], "method string"
-        )
-        tot = bf.agg(F.count(F.lit(1)).alias("total"))
-        h = F.coalesce(F.col("hits"), F.lit(0)).cast("bigint")
-        out = (
-            names.join(hits, "method", "left")
-            .crossJoin(tot)  # 1-row scalar — broadcast-NL by construction
-            .select(
-                "method",
-                h.alias("hits"),
-                F.col("total").cast("bigint").alias("total"),
-                F.round(
-                    h.cast("double") / F.col("total").cast("double"), 6
-                ).alias("recall_at_k"),
-            )
-            .orderBy("method")
-        )
-        for f in futs:  # caches fully populated before any consumer runs
-            f.result()
-    return out
+        .orderBy("method")
+    )
 
 
 def ann_recall_audit_sql() -> str:

@@ -77,8 +77,8 @@ def test_scratch_cache_context_manager(spark):
 
 
 def test_audit_pool_joined_when_a_constructor_raises(spark, monkeypatch):
-    """The recall audit's background-materialization pool must not leak
-    its worker threads when building a method raises mid-audit."""
+    """Building the recall audit must leave no worker thread behind when
+    a method's constructor raises mid-audit."""
     import threading
 
     import pytest

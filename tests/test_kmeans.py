@@ -163,3 +163,40 @@ def test_element_level_null_parity(spark):
     assert a == s and len(a) == 4
     assert next(t for t in a if t[0] == 2)[1:] == (None, None)
     assert next(t for t in a if t[0] == 3)[1:] == (None, None)
+
+
+def test_kmeans_is_one_subspace_pq(spark):
+    """k-means and the PQ codebook fit are one Lloyd loop: on the same grid
+    rows, kmeans_assign's cluster ids equal the cells of a one-subspace
+    PQ codebook (fit_codebooks_grid(m=1)) under _assign_residual_grid."""
+    import os
+
+    import pytest
+
+    sf = "/root/testdata/sf0.01"
+    if not os.path.isdir(sf):
+        pytest.skip("driver parquet fixtures not available")
+    from checkatron_spark.operators.pq import (
+        _assign_residual_grid,
+        _quantized,
+        fit_codebooks_grid,
+    )
+    from checkatron_spark.sources.tables import load_table
+
+    emb = load_table(spark, "embeddings", sf)
+    xq = _quantized(emb, "vec_id", "embedding", 10000)
+    same_rows = emb.join(xq.select("vec_id"), "vec_id")
+    n = xq.count()
+    for k, iters in ((8, 3), (4, 2)):
+        km = {
+            (r.vec_id, r.cluster_id)
+            for r in kmeans_assign(same_rows, k=k, iters=iters).collect()
+        }
+        (book,) = fit_codebooks_grid(xq, m=1, k=k, iters=iters)
+        pq = {
+            (r.vec_id, r.cell)
+            for r in _assign_residual_grid(
+                xq, book, residual=False
+            ).collect()
+        }
+        assert km == pq and len(km) == n

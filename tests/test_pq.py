@@ -687,6 +687,33 @@ def test_ivf_index_store_hit_equals_rebuild(spark, tmp_path, monkeypatch):
     ) == cold_rows
 
 
+def test_ivfpq_injected_index_width_mismatch_is_named(spark, tmp_path,
+                                                     monkeypatch):
+    """An injected index narrower than its coarse centroids fails with an
+    error that names both widths, instead of surfacing downstream as a
+    "ragged corpus" error from the encode kernel."""
+    import checkatron_spark.operators.pq as P
+    from checkatron_spark import model_cache
+
+    monkeypatch.setattr(model_cache, "ROOT", str(tmp_path))
+    emb = _vecs(spark, _clustered_rows())
+    queries = emb.filter(F.col("vec_id") % 50 == 0)
+    params = dict(n_cells=4, iters=2, scale=10000, fit_sample=64,
+                  cache_key="t")
+    # warm the residual books so the injected-index path is taken
+    P.ivfpq_topk(emb, queries, m=2, k=4, **params).collect()
+    index, coarse = P.ivf_grid_index(emb, **params)
+    narrow = index.withColumn("_x", F.slice("_x", 1, 4))
+    with pytest.raises(
+        Exception, match="index vectors have 4 dims but the coarse "
+                         "centroids have 8"
+    ):
+        P.ivfpq_topk(
+            emb, queries, m=2, k=4, n_probe=2, index=narrow, coarse=coarse,
+            **params,
+        ).collect()
+
+
 def test_coarse_assign_expr_equals_kernel(spark):
     """The centroid-literal codegen argmin (streaming admission path)
     must assign EVERY vector to the same cell as the Arrow kernel —

@@ -288,10 +288,11 @@ def test_semdedup_arrow_kernel_rejects_mixed_dims(spark):
         [(1, [1.0, 0.0]), (2, [1.0, 0.0, 0.0])],
         "vec_id long, embedding array<float>",
     )
-    # in practice the kmeans centroid build raises first (inhomogeneous
-    # numpy shape); the pair kernel's own guard catches what slips past
-    # it (e.g. per-cluster raggedness under a future seeding change) —
-    # either way mixed dims FAIL FAST instead of silently mis-scoring
+    # in practice the kmeans assignment core raises first (mixed
+    # embedding dimensions); the pair kernel's own guard catches what
+    # slips past it (e.g. per-cluster raggedness under a future seeding
+    # change) — either way mixed dims FAIL FAST instead of silently
+    # mis-scoring
     with pytest.raises(
         Exception, match="mixed embedding dimensions|inhomogeneous"
     ):
