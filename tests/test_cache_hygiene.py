@@ -104,8 +104,8 @@ def test_audit_pool_joined_when_a_constructor_raises(spark, monkeypatch):
 def test_compaction_releases_its_frame_when_the_write_fails(
     spark, tmp_path, monkeypatch
 ):
-    """apply_delta_stream's compaction persists the folded log; an epoch
-    write that raises must still unpersist it."""
+    """apply_delta_stream's compaction caches nothing: an epoch write
+    that raises must leave the CacheManager empty."""
     import pytest
     from pyspark.sql import DataFrameWriter
     from pyspark.sql import functions as F

@@ -607,3 +607,161 @@ def test_lsm_store_checkpoint_loss_full_replay_is_idempotent(spark, tmp_path):
     snap2 = apply_delta_stream(_sdf(), base, ["k"], ["v"], state_dir=state,
                                n_buckets=8, compact_every=2)
     assert sorted(map(tuple, snap2.collect())) == before
+
+
+def _feed_stream(spark, tmp_path, batches):
+    """One parquet file per batch, written in order, replayed one file per
+    micro-batch (the file source delivers files oldest first)."""
+    feed = str(tmp_path / "feed")
+    for rows in batches:
+        _delta_df(spark, rows).coalesce(1).write.mode("append").parquet(feed)
+    return (
+        spark.readStream.schema(_delta_df(spark, batches[0]).schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(feed)
+    )
+
+
+def _rows(df):
+    from collections import Counter
+
+    return Counter(map(tuple, df.collect()))
+
+
+def _assert_folds_inside_touched(io_log):
+    compacts = [r for r in io_log if r["mode"] == "compact"]
+    assert compacts
+    for rec in compacts:
+        for f in rec["files_read"]:
+            assert any(f"_bucket={b}/" in f for b in rec["touched"]), f
+
+
+def test_lsm_store_fold_equals_sequential_apply_delta(spark, tmp_path):
+    """The store's one-pass fold must equal replaying the batches one by
+    one through apply_delta: duplicate base keys survive untouched or
+    collapse to the one upserted image, NULL keys match null-safely, and
+    keys re-touched across epochs end at their newest image (U then D,
+    D then I), both inside one compaction and across compactions."""
+    from checkatron_spark.streaming import apply_delta_stream
+
+    base = spark.createDataFrame(
+        [(1, 10), (1, 11), (2, 20), (2, 21), (3, 30), (4, 40),
+         (None, 5), (None, 6)]
+        + [(i, i * 10) for i in range(5, 40)],
+        "k bigint, v bigint",
+    )
+    batches = [
+        [("U", 3, 33), ("D", 4, None), ("U", None, 7)],
+        [("D", 3, None), ("I", 4, 44), ("I", 500, 5)],
+        [("U", 2, 22), ("U", 500, 50), ("D", None, None)],
+        [("I", 3, 333), ("U", 7, 77)],
+    ]
+    io_log: list = []
+    snap = apply_delta_stream(
+        _feed_stream(spark, tmp_path, batches), base, ["k"], ["v"],
+        state_dir=str(tmp_path / "state"), n_buckets=4, compact_every=2,
+        io_log=io_log,
+    )
+    want = base
+    for rows in batches:
+        want = apply_delta(want, _delta_df(spark, rows), ["k"], ["v"])
+    assert _rows(snap) == _rows(want)
+    assert sum(r["mode"] == "compact" for r in io_log) == 2
+    _assert_folds_inside_touched(io_log)
+
+
+def test_lsm_store_orphan_insert_into_bucket_missing_from_manifest(
+    spark, tmp_path
+):
+    """An orphan log found at restart has no observed bucket set; its
+    buckets are recovered from the log itself, including one that holds
+    no snapshot rows yet, so an insert there must still land."""
+    import json
+
+    from checkatron_spark.streaming import apply_delta_stream
+
+    base = spark.createDataFrame([(1, 10), (2, 20)], "k bigint, v bigint")
+    batch = [("U", 1, 11)]
+    sdf = _feed_stream(spark, tmp_path, [batch])
+    state = str(tmp_path / "state")
+    apply_delta_stream(sdf, base, ["k"], ["v"], state_dir=state, n_buckets=8)
+    with open(f"{state}/manifest.json") as fh:
+        live = {int(b) for b in json.load(fh)}
+    bucket = {
+        r.k: r.b
+        for r in spark.range(100, 200)
+        .selectExpr("id AS k", "pmod(xxhash64(id), 8) AS b")
+        .collect()
+    }
+    k_new = next(k for k, b in bucket.items() if b not in live)
+    orphan = [("I", k_new, 5), ("U", 2, 22)]
+    _delta_df(spark, orphan).withColumn("_epoch", F.lit(50)).write.parquet(
+        f"{state}/log/e50"
+    )
+    io_log: list = []
+    snap = apply_delta_stream(sdf, base, ["k"], ["v"], state_dir=state,
+                              n_buckets=8, io_log=io_log)
+    want = base
+    for rows in (batch, orphan):
+        want = apply_delta(want, _delta_df(spark, rows), ["k"], ["v"])
+    assert _rows(snap) == _rows(want)
+    (fold,) = [r for r in io_log if r["mode"] == "compact"]
+    assert fold["epochs"] == [50] and bucket[k_new] in fold["touched"]
+    _assert_folds_inside_touched(io_log)
+
+
+def test_apply_delta_stream_job_count(spark, tmp_path):
+    """Work pin: one call over a 2-file feed runs the seed write, one log
+    write per batch (which also observes the batch's buckets), one fold
+    write and nothing else of note — no persist, no touched-bucket
+    collect, no schema-inference job on the store's own files."""
+    from checkatron_spark.session import release_scratch
+    from checkatron_spark.streaming import apply_delta_stream
+
+    base = spark.range(200).select(
+        F.col("id").alias("k"), (F.col("id") * 2).alias("v")
+    )
+    sdf = _feed_stream(spark, tmp_path, [[("U", 4, 44), ("D", 9, None)],
+                                         [("I", 901, 5), ("U", 100, 7)]])
+    release_scratch()  # frames other tests left cached
+    spark.catalog.clearCache()
+    sched = spark.sparkContext._jsc.sc().dagScheduler()
+    job0 = sched.nextJobId()
+    apply_delta_stream(sdf, base, ["k"], ["v"], state_dir=str(tmp_path / "s"),
+                       n_buckets=8, compact_every=2)
+    jobs = sched.nextJobId() - job0
+    assert jobs <= 7, f"{jobs} Spark jobs per call"
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_apply_delta_stream_leaves_only_py4j_threads(spark, tmp_path):
+    """Each call's foreachBatch query leaves one idle py4j connection
+    thread behind (see apply_delta_stream's docstring). Anything else that
+    survives a call — a pool, a timer — belongs to the store and fails
+    this test."""
+    import os
+    import sys
+    import threading
+
+    from checkatron_spark.streaming import apply_delta_stream
+
+    base = spark.range(50).select(
+        F.col("id").alias("k"), F.col("id").alias("v")
+    )
+    before = set(threading.enumerate())
+    for run in ("a", "b"):
+        sdf = _feed_stream(spark, tmp_path / run, [[("U", 4, 44)]])
+        apply_delta_stream(sdf, base, ["k"], ["v"], n_buckets=4,
+                           state_dir=str(tmp_path / run / "state"))
+    new = [t for t in threading.enumerate() if t not in before]
+    frames = sys._current_frames()  # a thread gone by now did not survive
+
+    def _runs_py4j(f):
+        while f is not None:
+            if f"{os.sep}py4j{os.sep}" in f.f_code.co_filename:
+                return True
+            f = f.f_back
+        return False
+
+    alive = [t for t in new if t.ident in frames]
+    assert [t.name for t in alive if not _runs_py4j(frames[t.ident])] == []

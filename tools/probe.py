@@ -2,7 +2,9 @@
 
 Cross-bench totals swing ±15-17% between host epochs (SCALE.md), so
 per-change evidence comes from ONE JVM timing the queries under test back
-to back (min-of-N each), not from comparing two full bench runs.
+to back (min-of-N each), not from comparing two full bench runs. Each
+timed run also reports its Spark job count (the ``nextJobId()`` range it
+spans), which does not drift with host load.
 ``--build-only`` times DataFrame construction alone (no action): the
 driver-side Catalyst/py4j cost of building a query, tracked separately
 from execution.
@@ -14,9 +16,9 @@ Usage:
   python tools/probe.py --tag before --explain plans/new q1
   python tools/probe.py --build-only q1            # construction time only
 
-Timings go to stdout as one JSON line per query (and a plain table on
-stderr). The noop sink forces every column of every row, same methodology
-as bench.py.
+Timings and job counts go to stdout as one JSON line per query (and a
+plain table on stderr). The noop sink forces every column of every row,
+same methodology as bench.py.
 """
 
 from __future__ import annotations
@@ -24,6 +26,7 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import statistics
 import sys
 import time
 
@@ -37,6 +40,10 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 def _force(df) -> None:
     df.write.format("noop").mode("overwrite").save()
+
+
+def _next_job(spark) -> int:
+    return int(spark.sparkContext._jsc.sc().dagScheduler().nextJobId())
 
 
 def main() -> None:
@@ -80,30 +87,34 @@ def main() -> None:
         for _ in range(args.runs):
             if args.build_only:
                 release_scratch()
+            job0 = _next_job(spark)
             t0 = time.perf_counter()
             df = qs[name](spark, SF_DIR)
             build = round(time.perf_counter() - t0, 3)
             if not args.build_only:
                 _force(df)
             total = round(time.perf_counter() - t0, 3)
-            runs.append((total, build))
+            runs.append((total, build, _next_job(spark) - job0))
         spark.sparkContext.setJobDescription(None)
         if not runs:
             continue  # --runs 0: plan dump only
         totals = [r[0] for r in runs]
         builds = [r[1] for r in runs]
+        jobs = [r[2] for r in runs]
         rec = {
             "q": name,
             "min": min(totals),
+            "median": statistics.median(totals),
             "runs": totals,
+            "jobs": jobs,
             "build_min": min(builds),
             "builds": builds,
             "postwarm_min": min(totals[1:]) if len(totals) > 1 else totals[0],
         }
         print(json.dumps(rec))
         print(
-            f"[probe] {name}: min={rec['min']} build_min={rec['build_min']}"
-            f" runs={totals}",
+            f"[probe] {name}: min={rec['min']} median={rec['median']}"
+            f" build_min={rec['build_min']} runs={totals} jobs={jobs}",
             file=sys.stderr,
         )
 
