@@ -17,6 +17,29 @@ key is the shingle (or band hash), so work is proportional to shared content,
 not to n^2. Hot shingles (stop-shingles shared by a large fraction of docs)
 are the skew risk — ``max_shingle_freq`` drops them, which is both a perf
 guard and standard near-dup practice.
+
+A similarity join is candidate generation plus one verification step, and
+each near-dup rule is written once here, as a private helper every
+operator uses:
+
+- ``_shingler``            : the word n-gram shingle rule (the ``shingles``
+                             UDF and the banded-MinHash signature UDF), and
+  ``_shingle_rows``          one row per (doc, shingle) for decontamination;
+- ``_hot``                 : the skew guard's hot set (``max_shingle_freq``,
+                             ``max_fp_freq``);
+- ``_ppjoin_prefix``       : the PPJoin prefix stage (n-gram Jaccard, full
+                             and incremental);
+- ``_band_candidates``     : the (band index, band value) self-join, with
+  ``_check_bands``           its ``num_hashes % band_r`` guard (both MinHash
+                             operators);
+- ``_jaccard_verified``    : the exact-Jaccard verifier every candidate
+                             generator above feeds;
+- ``_bloom_pos_sql``       : the Bloom bit position and bit test as SQL, one
+  ``_bloom_all_set_sql``     copy for the mask build, the batch probe and the
+                             streaming gate (``bloom_hits_expr``).
+
+The min-id-per-fingerprint collapse is :func:`dedup_canonical`; the staged
+corpus dedup calls it with no key columns.
 """
 
 from __future__ import annotations
@@ -28,7 +51,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, StringType
 from pyspark.sql.window import Window
-from checkatron_spark.session import scratch_persist
+from checkatron_spark.session import release, scratch_checkpoint, scratch_persist
 
 from checkatron_spark.functions.text import WS_CLASS, fingerprint
 
@@ -48,8 +71,7 @@ __all__ = [
     "reelect_representatives",
     "split_by_cluster",
     "substring_dup_pairs",
-    # review r9: the Bloom decontamination family + staged corpus dedup
-    # were missing from the public surface
+    # decontamination (exact, per-suite and Bloom) and staged corpus dedup
     "decontaminate",
     "decontaminate_multi",
     "bloom_mask_words",
@@ -89,11 +111,30 @@ def dedup_keyed(df: DataFrame, partition_cols: list[str], order_col: str) -> Dat
     )
 
 
-# the round-10 whitespace contract, python side: the class is DERIVED from
-# the single source of truth (functions/text.py WS_CLASS — python re reads
-# the \t/\n escapes identically to Java/RE2), plus space-only strip
-# matching SQL trim() exactly
+# the whitespace contract, python side: the class is DERIVED from the
+# single source of truth (functions/text.py WS_CLASS — python re reads the
+# \t/\n escapes identically to Java/RE2), plus space-only strip matching
+# SQL trim() exactly
 _WS_RE = re.compile(WS_CLASS + "+")
+
+
+def _shingler(n: int):
+    """THE shingle rule (semantics in :func:`shingles`): a function from
+    one text to its distinct word n-grams, in first-occurrence order. A
+    closure, so the UDFs that call it ship it by value — Python workers
+    need not import this package."""
+
+    def grams(text) -> list[str]:
+        words = _WS_RE.split((text or "").strip(" "))
+        if len(words) < n:
+            return [" ".join(words)]
+        return list(
+            dict.fromkeys(
+                " ".join(words[i : i + n]) for i in range(len(words) - n + 1)
+            )
+        )
+
+    return grams
 
 
 def shingles(text_col, n: int = 3):
@@ -103,7 +144,7 @@ def shingles(text_col, n: int = 3):
     Semantics (mirrored by the DuckDB oracles): split SQL-trimmed text
     (spaces only — NOT python str.strip, which eats unicode whitespace the
     oracle's trim() keeps) on the explicit ``[ \\t\\n\\r\\f]+`` class
-    (round 10 whitespace contract, functions/text.py WS_CLASS; python's
+    (the whitespace contract, functions/text.py WS_CLASS; python's
     ``\\s`` is unicode-aware and Java's includes \\x0B — both diverge
     from the RE2 oracle). Empty text yields the [''] sentinel like SQL
     split; docs with < n words get one whole-doc shingle; order-preserving
@@ -115,21 +156,29 @@ def shingles(text_col, n: int = 3):
     The vectorized Python loop over Arrow batches is ~10x faster and is the
     intended pattern for this shape of per-row text kernel."""
 
+    grams = _shingler(n)
+
     @F.pandas_udf(ArrayType(StringType()))
     def _sh(texts: pd.Series) -> pd.Series:
-        out = []
-        for t in texts:
-            words = _WS_RE.split((t or "").strip(" "))
-            if len(words) < n:
-                out.append([" ".join(words)])
-            else:
-                grams = dict.fromkeys(
-                    " ".join(words[i : i + n]) for i in range(len(words) - n + 1)
-                )
-                out.append(list(grams))
-        return pd.Series(out)
+        return pd.Series([grams(t) for t in texts])
 
     return _sh(text_col)
+
+
+def _shingle_rows(df: DataFrame, text_col: str, n: int, *cols) -> DataFrame:
+    """One row per (``cols``..., shingle ``s``) of each text."""
+    return df.select(*cols, F.explode(shingles(F.col(text_col), n)).alias("s"))
+
+
+def _hot(rows: DataFrame, key: str, max_freq: int) -> DataFrame:
+    """THE skew guard's hot set: the ``key`` values on more than
+    ``max_freq`` rows (shingles or fingerprints, one row per doc)."""
+    return (
+        rows.groupBy(key)
+        .agg(F.count(F.lit(1)).alias("_f"))
+        .filter(F.col("_f") > max_freq)
+        .select(key)
+    )
 
 
 def decontaminate(
@@ -150,13 +199,8 @@ def decontaminate(
     hash semi-join + per-doc count, no corpus-sized shuffle on the gram
     key. Returns (id_col, n_matched_grams) for contaminated docs only;
     anti-join the corpus against it to clean."""
-    doc_sh = docs.select(
-        F.col(id_col), F.explode(shingles(F.col(text_col), n)).alias("s")
-    )
-    bench_sh = (
-        benchmark.select(F.explode(shingles(F.col(text_col), n)).alias("s"))
-        .distinct()
-    )
+    doc_sh = _shingle_rows(docs, text_col, n, id_col)
+    bench_sh = _shingle_rows(benchmark, text_col, n).distinct()
     return (
         doc_sh.join(F.broadcast(bench_sh), "s")
         .groupBy(id_col)
@@ -185,15 +229,8 @@ def decontaminate_multi(
     suites never adds corpus scans. The single-benchmark operator is the
     bench_col-constant special case; an anti-join on the distinct doc ids
     cleans against ALL suites at once."""
-    doc_sh = docs.select(
-        F.col(id_col), F.explode(shingles(F.col(text_col), n)).alias("s")
-    )
-    bench_sh = (
-        benchmarks.select(
-            F.col(bench_col), F.explode(shingles(F.col(text_col), n)).alias("s")
-        )
-        .distinct()
-    )
+    doc_sh = _shingle_rows(docs, text_col, n, id_col)
+    bench_sh = _shingle_rows(benchmarks, text_col, n, bench_col).distinct()
     return (
         doc_sh.join(F.broadcast(bench_sh), "s")
         .groupBy(id_col, bench_col)
@@ -201,15 +238,31 @@ def decontaminate_multi(
     )
 
 
-def _bloom_pos(gram_col, seed: int, m_bits: int):
-    """THE Bloom bit-position primitive: md5 of 'gram#seed', first 8 hex
-    chars as uint32, mod m_bits. Mask build (bloom_mask_words), batch
-    probe (decontaminate_bloom), and the SQL-string probe
-    (bloom_hits_expr) all derive from this exact construction — the
-    bit-for-bit mask/probe agreement across engines IS the design, so
-    there must be exactly one Column-level copy."""
-    h = F.substring(F.md5(F.concat(gram_col, F.lit(f"#{seed}"))), 1, 8)
-    return F.conv(h, 16, 10).cast("bigint") % m_bits
+def _bloom_pos_sql(gram: str, seed: int, m_bits: int) -> str:
+    """THE Bloom bit position, as SQL over the gram expression ``gram``:
+    md5 of 'gram#seed', first 8 hex chars as uint32, mod m_bits. The mask
+    build (bloom_mask_words) sets these bits and every probe tests them
+    through :func:`_bloom_all_set_sql` — the bit-for-bit mask/probe
+    agreement across engines IS the design, so there is exactly one copy.
+    (SQL rather than Column: the bit test needs a variable-amount
+    shiftright, which only the SQL layer has.)"""
+    return (
+        f"(CAST(conv(substring(md5(concat({gram}, '#{seed}')), 1, 8), 16, 10) "
+        f"AS BIGINT) % {m_bits})"
+    )
+
+
+def _bloom_all_set_sql(gram: str, bits: str, m_bits: int, k: int) -> str:
+    """SQL predicate: all ``k`` Bloom bits of ``gram`` are set in the mask
+    column ``bits`` (an array of m_bits/64 longs)."""
+    tests = []
+    for i in range(k):
+        pos = _bloom_pos_sql(gram, i, m_bits)
+        tests.append(
+            f"((shiftright(element_at({bits}, CAST({pos} div 64 AS INT) + 1), "
+            f"CAST({pos} % 64 AS INT)) & 1) = 1)"
+        )
+    return " AND ".join(tests)
 
 
 def bloom_mask_words(
@@ -224,17 +277,12 @@ def bloom_mask_words(
     list of m_bits/64 signed longs a caller embeds with ``F.lit`` (see
     ``decontaminate_bloom`` for the full design discussion; the driver
     collect here is bounded by min(k·|grams|, m_bits) integers)."""
-
-    def _pos(gram_col, seed: int):
-        return _bloom_pos(gram_col, seed, m_bits)
-
-    bench_sh = (
-        benchmark.select(F.explode(shingles(F.col(text_col), n)).alias("s"))
-        .distinct()
-    )
+    bench_sh = _shingle_rows(benchmark, text_col, n).distinct()
     pos_rows = (
         bench_sh.select(
-            F.array(*[_pos(F.col("s"), i) for i in range(k)]).alias("ps")
+            F.array(
+                *[F.expr(_bloom_pos_sql("s", i, m_bits)) for i in range(k)]
+            ).alias("ps")
         )
         .select(F.explode("ps").alias("p"))
         .distinct()
@@ -277,20 +325,10 @@ def bloom_hits_expr(
     ``k`` Bloom bits set in the literal-mask column — the zero-state,
     zero-join membership test as a pure projection (the streaming gate's
     shape: no explode, no aggregation, so an append stream stays
-    stateless). The position arithmetic MUST stay the SQL-string twin of
-    ``_bloom_pos`` above — same seed format, substring width, and mod."""
-    tests = []
-    for i in range(k):
-        pos = (
-            f"(CAST(conv(substring(md5(concat(s, '#{i}')), 1, 8), 16, 10) "
-            f"AS BIGINT) % {m_bits})"
-        )
-        tests.append(
-            f"((shiftright(element_at({bits_col}, "
-            f"CAST({pos} div 64 AS INT) + 1), "
-            f"CAST({pos} % 64 AS INT)) & 1) = 1)"
-        )
-    return f"size(filter({arr_col}, s -> {' AND '.join(tests)}))"
+    stateless). The bit test is the batch probe's own
+    (:func:`_bloom_all_set_sql`)."""
+    all_set = _bloom_all_set_sql("s", bits_col, m_bits, k)
+    return f"size(filter({arr_col}, s -> {all_set}))"
 
 
 def decontaminate_bloom(
@@ -327,34 +365,17 @@ def decontaminate_bloom(
     flagged set (false positives included) is bit-identical across Spark
     and the DuckDB oracle. Returns (id_col, n_flagged_grams) for flagged
     docs only."""
-    seeds = list(range(k))
-
-    def _pos(gram_col, seed: int):
-        return _bloom_pos(gram_col, seed, m_bits)
-
     # pass mask_words (from a prior bloom_mask_words call) to skip the
     # benchmark-side build — the mask is a pure function of the benchmark
     if mask_words is None:
         mask_words = bloom_mask_words(
             benchmark, text_col, n=n, m_bits=m_bits, k=k
         )
-    bits = F.lit(mask_words)
-
-    doc_sh = docs.select(
-        F.col(id_col), F.explode(shingles(F.col(text_col), n)).alias("s")
-    ).withColumn("_bits", bits)
-    for i in seeds:
-        doc_sh = doc_sh.withColumn(f"_p{i}", _pos(F.col("s"), i))
-    # variable-amount shiftright only exists at the SQL-expression layer
-    # (the python F.shiftright wrapper insists on a literal int amount)
-    flagged = F.lit(True)
-    for i in seeds:
-        flagged = flagged & F.expr(
-            f"(shiftright(element_at(_bits, CAST(_p{i} div 64 AS INT) + 1), "
-            f"CAST(_p{i} % 64 AS INT)) & 1) = 1"
-        )
+    doc_sh = _shingle_rows(docs, text_col, n, id_col).withColumn(
+        "_bits", F.lit(mask_words)
+    )
     return (
-        doc_sh.filter(flagged)
+        doc_sh.filter(F.expr(_bloom_all_set_sql("s", "_bits", m_bits, k)))
         .groupBy(id_col)
         .agg(F.count(F.lit(1)).alias("n_flagged_grams"))
     )
@@ -410,6 +431,69 @@ def fuzzy_pairs_blocked(
     )
 
 
+def _ppjoin_prefix(posts: DataFrame, threshold: float, keys: list[str]) -> DataFrame:
+    """THE PPJoin prefix stage: keep each doc's first
+    ``floor((1-t)*_n) + 1`` postings under the global order (ascending
+    document frequency, ties by value — rarest first). ``posts`` is one
+    row per (``keys``..., ``_n``, shingle ``_s``); returns the persisted
+    (``keys``..., ``_s``) prefix rows, which feed both sides of the
+    candidate join (the materialized ordered-postings index every
+    PPJoin-family implementation builds; Spark evicts LRU)."""
+    freq = posts.groupBy("_s").agg(F.count(F.lit(1)).alias("_f"))
+    w = Window.partitionBy(*keys).orderBy(F.col("_f").asc(), F.col("_s").asc())
+    # +1e-9 before floor: (1-t)*n is an IEEE product and lands a hair BELOW
+    # the true value whenever it is mathematically an integer (e.g. t=0.8,
+    # n=5 -> 0.999...8, floor 0 instead of 1) — the lemma then gets a prefix
+    # one element short and can MISS a qualifying pair. One extra prefix
+    # element only adds candidates; one missing breaks exactness.
+    prefix_len = (
+        F.floor(
+            (F.lit(1.0) - F.lit(threshold)) * F.col("_n") + F.lit(1e-9)
+        ).cast("int")
+        + F.lit(1)
+    )
+    return (
+        posts.join(freq, "_s")
+        .withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") <= prefix_len)
+        .select(*keys, "_s")
+        .transform(scratch_persist)
+    )
+
+
+def _jaccard_verified(
+    cand: DataFrame,
+    a_docs: DataFrame,
+    b_docs: DataFrame,
+    threshold: float,
+    *,
+    a: str = "id_a",
+    b: str = "id_b",
+    out: str = "jaccard",
+) -> DataFrame:
+    """THE exact-Jaccard verifier every candidate generator feeds:
+    ``cand`` holds (``a``, ``b``) id pairs, ``a_docs``/``b_docs`` hold
+    (``_id``, shingle array ``_sh``) for each side. Returns (``a``, ``b``,
+    ``out``) with ``out`` = |A∩B| / (|A|+|B|-|A∩B|) >= threshold. The
+    denominator is summed in integers and divided once as doubles — exact
+    for any set size below 2^53, so every caller gets bit-identical
+    values."""
+    inter = F.size(F.array_intersect("_sha", "_shb"))
+    sha = a_docs.select(F.col("_id").alias(a), F.col("_sh").alias("_sha"))
+    shb = b_docs.select(F.col("_id").alias(b), F.col("_sh").alias("_shb"))
+    return (
+        cand.join(sha, a)
+        .join(shb, b)
+        .withColumn(
+            out,
+            inter.cast("double")
+            / (F.size("_sha") + F.size("_shb") - inter).cast("double"),
+        )
+        .filter(F.col(out) >= threshold)
+        .select(a, b, out)
+    )
+
+
 def neardup_ngram_jaccard(
     df: DataFrame,
     text_col: str,
@@ -440,44 +524,17 @@ def neardup_ngram_jaccard(
 
     Returns (id_a, id_b, jaccard) with id_a < id_b, jaccard >= threshold.
     """
-    # docs feeds the posting list AND both verify sides (3 consumers);
-    # prefix feeds both sides of the candidate self-join (2 consumers) —
-    # persist both so shingling and the freq+window prefix pipeline run
-    # once. This is the materialized ordered-postings index every
-    # PPJoin-family implementation builds; Spark evicts LRU.
+    # docs feeds the posting list AND both verify sides (3 consumers) —
+    # persisted so shingling runs once
     docs = df.select(
         F.col(id_col).alias("_id"),
         shingles(F.col(text_col), n).alias("_sh"),
     ).withColumn("_n", F.size("_sh")).transform(scratch_persist)
     posts = docs.select("_id", "_n", F.explode("_sh").alias("_s"))
     if max_shingle_freq is not None:
-        hot = (
-            posts.groupBy("_s")
-            .agg(F.count(F.lit(1)).alias("_f"))
-            .filter(F.col("_f") > max_shingle_freq)
-            .select("_s")
-        )
+        hot = _hot(posts, "_s", max_shingle_freq)
         posts = posts.join(F.broadcast(hot), "_s", "left_anti")
-    freq = posts.groupBy("_s").agg(F.count(F.lit(1)).alias("_f"))
-    w = Window.partitionBy("_id").orderBy(F.col("_f").asc(), F.col("_s").asc())
-    # +1e-9 before floor: (1-t)*n is an IEEE product and lands a hair BELOW
-    # the true value whenever it is mathematically an integer (e.g. t=0.8,
-    # n=5 -> 0.999...8, floor 0 instead of 1) — the lemma then gets a prefix
-    # one element short and can MISS a qualifying pair. One extra prefix
-    # element only adds candidates; one missing breaks exactness.
-    prefix_len = (
-        F.floor(
-            (F.lit(1.0) - F.lit(threshold)) * F.col("_n") + F.lit(1e-9)
-        ).cast("int")
-        + F.lit(1)
-    )
-    prefix = (
-        posts.join(freq, "_s")
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= prefix_len)
-        .select("_id", "_s")
-        .transform(scratch_persist)
-    )
+    prefix = _ppjoin_prefix(posts, threshold, ["_id"])
     cand = (
         prefix.alias("pa")
         .join(prefix.alias("pb"), "_s")
@@ -487,22 +544,7 @@ def neardup_ngram_jaccard(
         .filter(F.col("id_a") < F.col("id_b"))
         .distinct()
     )
-    a = docs.select(F.col("_id").alias("id_a"), F.col("_sh").alias("_sha"),
-                    F.col("_n").alias("_na"))
-    b = docs.select(F.col("_id").alias("id_b"), F.col("_sh").alias("_shb"),
-                    F.col("_n").alias("_nb"))
-    return (
-        cand.join(a, "id_a")
-        .join(b, "id_b")
-        .withColumn("_inter", F.size(F.array_intersect("_sha", "_shb")))
-        .withColumn(
-            "jaccard",
-            F.col("_inter").cast("double")
-            / (F.col("_na") + F.col("_nb") - F.col("_inter")).cast("double"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
+    return _jaccard_verified(cand, docs, docs, threshold)
 
 
 def dedup_incremental(
@@ -588,28 +630,7 @@ def neardup_incremental(
         .transform(scratch_persist)
     )
     posts = docs.select("_side", "_id", "_n", F.explode("_sh").alias("_s"))
-    freq = posts.groupBy("_s").agg(F.count(F.lit(1)).alias("_f"))
-    w = Window.partitionBy("_side", "_id").orderBy(
-        F.col("_f").asc(), F.col("_s").asc()
-    )
-    # +1e-9 before floor: (1-t)*n is an IEEE product and lands a hair BELOW
-    # the true value whenever it is mathematically an integer (e.g. t=0.8,
-    # n=5 -> 0.999...8, floor 0 instead of 1) — the lemma then gets a prefix
-    # one element short and can MISS a qualifying pair. One extra prefix
-    # element only adds candidates; one missing breaks exactness.
-    prefix_len = (
-        F.floor(
-            (F.lit(1.0) - F.lit(threshold)) * F.col("_n") + F.lit(1e-9)
-        ).cast("int")
-        + F.lit(1)
-    )
-    prefix = (
-        posts.join(freq, "_s")
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= prefix_len)
-        .select("_side", "_id", "_s")
-        .transform(scratch_persist)
-    )
+    prefix = _ppjoin_prefix(posts, threshold, ["_side", "_id"])
     cand = (
         prefix.filter(F.col("_side") == 0)
         .select(F.col("_id").alias("new_id"), "_s")
@@ -622,35 +643,21 @@ def neardup_incremental(
         .select("new_id", "base_id")
         .distinct()
     )
-    a = docs.filter(F.col("_side") == 0).select(
-        F.col("_id").alias("new_id"),
-        F.col("_sh").alias("_sha"),
-        F.col("_n").alias("_na"),
-    )
-    b = docs.filter(F.col("_side") == 1).select(
-        F.col("_id").alias("base_id"),
-        F.col("_sh").alias("_shb"),
-        F.col("_n").alias("_nb"),
-    )
-    return (
-        cand.join(a, "new_id")
-        .join(b, "base_id")
-        .withColumn("_inter", F.size(F.array_intersect("_sha", "_shb")))
-        .withColumn(
-            "jaccard",
-            F.col("_inter").cast("double")
-            / (F.col("_na") + F.col("_nb") - F.col("_inter")).cast("double"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("new_id", "base_id", "jaccard")
+    return _jaccard_verified(
+        cand,
+        docs.filter(F.col("_side") == 0),
+        docs.filter(F.col("_side") == 1),
+        threshold,
+        a="new_id",
+        b="base_id",
     )
 
 
 # Above this many distinct over-cap shingles, the in-plan literal array
 # (F.array of F.lit strings riding the task closure) stops being the right
-# vehicle: the plan itself bloats with thousands of string literals
-# (VERDICT r11 watch-list). Past the bound, the hot set stays distributed —
-# explode + broadcast ANTI join + order-preserving rebuild.
+# vehicle: the plan itself bloats with thousands of string literals. Past
+# the bound, the hot set stays distributed — explode + broadcast ANTI join
+# + order-preserving rebuild.
 _HOT_SHINGLE_LITERAL_MAX = 1000
 
 
@@ -672,12 +679,8 @@ def _drop_hot_shingles(docs: DataFrame, max_shingle_freq: int) -> DataFrame:
       Docs whose every shingle is hot rebuild to an EMPTY array exactly
       like array_except (the left join keeps their id; filtered grams
       aggregate to []). Property-pinned equal in tests/test_lsh.py."""
-    hot_df = (
-        docs.select(F.explode("_sh").alias("_s"))
-        .groupBy("_s")
-        .agg(F.count(F.lit(1)).alias("_f"))
-        .filter(F.col("_f") > max_shingle_freq)
-        .select("_s")
+    hot_df = _hot(
+        docs.select(F.explode("_sh").alias("_s")), "_s", max_shingle_freq
     )
     probe = hot_df.limit(_HOT_SHINGLE_LITERAL_MAX + 1).collect()
     if not probe:
@@ -708,6 +711,35 @@ def _drop_hot_shingles(docs: DataFrame, max_shingle_freq: int) -> DataFrame:
     )
 
 
+def _check_bands(op: str, num_hashes: int, band_r: int) -> None:
+    if num_hashes % band_r:
+        raise ValueError(
+            f"{op}: num_hashes ({num_hashes}) must be a multiple of band_r "
+            f"({band_r}) — a short trailing band is an OR-only "
+            "(quadratic-candidate) leak"
+        )
+
+
+def _band_candidates(bands: DataFrame) -> DataFrame:
+    """THE banded-LSH candidate step: ``bands`` holds one row per (``_id``,
+    band index ``_bi``, band value ``_bv``); two docs are a candidate when
+    any band index carries an equal value. Returns distinct (id_a, id_b)
+    with id_a < id_b. Shuffle key = (band, value), so work tracks
+    genuinely-colliding content; a hot band value (many identical docs) is
+    the skew risk and inherits AQE skew splitting."""
+    return (
+        bands.alias("a")
+        .join(
+            bands.alias("b"),
+            (F.col("a._bi") == F.col("b._bi"))
+            & (F.col("a._bv") == F.col("b._bv"))
+            & (F.col("a._id") < F.col("b._id")),
+        )
+        .select(F.col("a._id").alias("id_a"), F.col("b._id").alias("id_b"))
+        .distinct()
+    )
+
+
 def neardup_minhash_lsh(
     df: DataFrame,
     text_col: str,
@@ -732,20 +764,19 @@ def neardup_minhash_lsh(
     (P[collide] = 1-(1-s)^16: 0.99997 at s=0.5, ~1 above) at a quarter of
     the 64-table candidate/explode cost.
 
-    ``max_shingle_freq`` (round 7 — the probe's first genuine catch):
-    drop shingles whose document frequency exceeds the cap BEFORE
-    hashing. A corpus-hot shingle (boilerplate by definition) dominates
-    the min of every doc containing it, so its LSH bucket grows linearly
-    with corpus size and candidate pairs quadratically — measured 23.8x
-    runtime at a 10x corpus step with a linear true-pair count; capped,
-    the bucket bound is (cap / doc_len) regardless of corpus size. Same
-    policy and name as the exact variant's guard; jaccard_est becomes
-    jaccard over the capped shingle sets (stop-shingle removal — the
-    standard MinHashLSH practice). The hot set is tiny by construction
-    (≤ |corpus|/cap distinct values can exceed the cap), so it rides the
-    task closure like the Bloom mask.
+    ``max_shingle_freq``: drop shingles whose document frequency exceeds
+    the cap BEFORE hashing. A corpus-hot shingle (boilerplate by
+    definition) dominates the min of every doc containing it, so its LSH
+    bucket grows linearly with corpus size and candidate pairs
+    quadratically — measured 23.8x runtime at a 10x corpus step with a
+    linear true-pair count; capped, the bucket bound is (cap / doc_len)
+    regardless of corpus size. Same policy and name as the exact
+    variant's guard; jaccard_est becomes jaccard over the capped shingle
+    sets (stop-shingle removal — the standard MinHashLSH practice). The
+    hot set is tiny by construction (≤ |corpus|/cap distinct values can
+    exceed the cap), so it rides the task closure like the Bloom mask.
 
-    ``band_r`` (round 7): MLlib's ``approxSimilarityJoin`` only supports
+    ``band_r``: MLlib's ``approxSimilarityJoin`` only supports
     OR-amplification (one hash per table), which makes candidate volume
     quadratic in corpus size whenever the corpus has nonzero BACKGROUND
     similarity (shared zipf-head shingles): P(candidate|s) ≈ b·s0 for
@@ -759,6 +790,7 @@ def neardup_minhash_lsh(
     survive. ``num_hashes`` must divide by ``band_r``."""
     from pyspark.ml.feature import HashingTF, MinHashLSH
 
+    _check_bands("neardup_minhash_lsh", num_hashes, band_r)
     docs = df.select(
         F.col(id_col).alias("_id"), shingles(F.col(text_col), n).alias("_sh")
     )
@@ -778,12 +810,6 @@ def neardup_minhash_lsh(
     )
     model = mh.fit(feats)
     if band_r > 1:
-        if num_hashes % band_r:
-            raise ValueError(
-                f"neardup_minhash_lsh: num_hashes ({num_hashes}) must be "
-                f"a multiple of band_r ({band_r}) — a short trailing band "
-                "is an OR-only (quadratic-candidate) leak"
-            )
         from pyspark.ml.functions import vector_to_array
 
         # AND-amplified candidate join over the MLlib signatures: band
@@ -806,33 +832,8 @@ def neardup_minhash_lsh(
                 ).alias("_bv")
             )
         )
-        cand = (
-            ex.alias("a")
-            .join(
-                ex.alias("b"),
-                (F.col("a._bi") == F.col("b._bi"))
-                & (F.col("a._bv") == F.col("b._bv"))
-                & (F.col("a._id") < F.col("b._id")),
-            )
-            .select(
-                F.col("a._id").alias("id_a"), F.col("b._id").alias("id_b")
-            )
-            .distinct()
-        )
-        av = feats.select(F.col("_id").alias("id_a"), F.col("_sh").alias("_sha"))
-        bv = feats.select(F.col("_id").alias("id_b"), F.col("_sh").alias("_shb"))
-        inter = F.size(F.array_intersect("_sha", "_shb")).cast("double")
-        union = (
-            F.size("_sha").cast("double")
-            + F.size("_shb").cast("double")
-            - inter
-        )
-        return (
-            cand.join(av, "id_a")
-            .join(bv, "id_b")
-            .withColumn("jaccard_est", inter / union)
-            .filter(F.col("jaccard_est") >= threshold)
-            .select("id_a", "id_b", "jaccard_est")
+        return _jaccard_verified(
+            _band_candidates(ex), feats, feats, threshold, out="jaccard_est"
         )
     pairs = model.approxSimilarityJoin(
         feats, feats, 1.0 - threshold, distCol="_dist"
@@ -960,44 +961,35 @@ def connected_components(
     before data size matters. Genuinely iterative -> no single-query SQL
     oracle; the driver entry uses DuckDB's recursive CTE as ground truth.
 
+    Every checkpoint goes through the scratch registry: the returned
+    labels read the last one, so collect them before
+    :func:`~checkatron_spark.session.release_scratch` frees it.
+
     Raises ``RuntimeError`` if the loop exits at ``max_iter`` with labels
-    still changing (VERDICT r6 item 4): silently-unconverged labels split
-    one component into several and downstream keep-list dedup would keep
-    rows it should drop — fail loudly instead.
+    still changing: silently-unconverged labels split one component into
+    several and downstream keep-list dedup would keep rows it should drop
+    — fail loudly instead.
     """
     # materialize edges ONCE: the pair generator upstream (e.g. the whole
     # prefix-filtered jaccard join) would otherwise re-execute every round
-    edges = (
+    edges = scratch_checkpoint(
         pairs.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
         .union(
             pairs.select(F.col(dst_col).alias("src"), F.col(src_col).alias("dst"))
         )
         .distinct()
-        .localCheckpoint()
     )
-    labels = nodes.select(
-        F.col(id_col).alias("node"), F.col(id_col).alias("lbl")
-    ).localCheckpoint()
+    labels = scratch_checkpoint(
+        nodes.select(F.col(id_col).alias("node"), F.col(id_col).alias("lbl"))
+    )
 
-    # Deterministic checkpoint release (round 15): every round leaves a
-    # superseded localCheckpoint RDD behind, and those blocks previously
-    # lived until the JVM's ContextCleaner got around to them — repeated
-    # runs in one session accumulated checkpoints (measured: 6 -> 15
-    # cached RDDs over 6 bench-style runs) and the async cleanup raced
-    # the NEXT run's jobs, swinging neardup_clusters 4.4-9.9 s within one
-    # quiet session (stable 4.0-4.3 s once cleanup is forced). A round's
-    # checkpoint is safe to drop exactly when the round after it has
-    # materialized (checkpoints cannot recompute, so never before); the
-    # edge set is safe after convergence. The final labels frame is the
-    # caller's and keeps its normal lifetime. Best-effort: the RDD handle
-    # rides Spark's LogicalRDD internals, so any failure just reverts to
-    # GC-paced cleanup.
-    def _release_ckpt(df) -> None:
-        try:
-            df._jdf.queryExecution().logical().rdd().unpersist(False)
-        except Exception:  # noqa: BLE001 — fall back to GC-paced cleanup
-            pass
-
+    # Checkpoint release: a round's checkpoint is safe to drop exactly when
+    # the round after it has materialized (checkpoints cannot recompute, so
+    # never before), the edge set after the loop. Dropping them here, not
+    # at GC-paced ContextCleaner time, keeps repeated runs in one session
+    # from accumulating checkpoint blocks and keeps the async cleanup from
+    # racing the next run's jobs. The final labels checkpoint is the
+    # caller's until release_scratch().
     prev = labels
     changed = 0
     for it in range(max_iter):
@@ -1027,9 +1019,9 @@ def connected_components(
             .agg(F.min("lbl").alias("nlbl"))
         )
         # labels only ever decrease, so "changed" = "an incoming label beat
-        # mine" — carried as a flag in the SAME pass (the old separate
-        # new-vs-old join cost an extra shuffle per round)
-        new = (
+        # mine" — carried as a flag in the SAME pass, which saves a
+        # new-vs-old join (and its shuffle) per round
+        new = scratch_checkpoint(
             labels.join(prop, F.col("node") == F.col("dst"), "left")
             .select(
                 "node",
@@ -1039,28 +1031,25 @@ def connected_components(
                 (F.coalesce(F.col("nlbl"), F.col("lbl")) < F.col("lbl")).alias(
                     "_chg"
                 ),
-            )
-            .localCheckpoint(eager=False)
+            ),
+            eager=False,
         )
-        # ONE job per round (round 14): the full-scan max over _chg both
-        # answers convergence AND materializes the lazy checkpoint —
-        # every partition is computed by the agg, so the cached blocks
-        # are complete and the next round reads them, not the lineage.
-        # (The former shape paid two jobs: an eager checkpoint
-        # materialization plus a filter/limit count. A short-circuiting
-        # action like limit(1) would be WRONG here — it can skip
-        # partitions and leave the checkpoint partial.)
+        # ONE job per round: the full-scan max over _chg both answers
+        # convergence AND materializes the lazy checkpoint — every
+        # partition is computed by the agg, so the cached blocks are
+        # complete and the next round reads them, not the lineage. A
+        # short-circuiting action like limit(1) would be WRONG here — it
+        # can skip partitions and leave the checkpoint partial.
         row = new.agg(F.max(F.col("_chg").cast("int")).alias("_m")).first()
         changed = int(row._m or 0)
         # `new` is now fully materialized, so the previous round's
-        # checkpoint can never be read again — release it now instead of
-        # waiting for the ContextCleaner
-        _release_ckpt(prev)
+        # checkpoint can never be read again
+        release(prev)
         prev = new
         labels = new.drop("_chg")
         if changed == 0:
             break
-    _release_ckpt(edges)
+    release(edges)
     if changed:
         raise RuntimeError(
             f"connected_components: labels still changing after "
@@ -1154,9 +1143,10 @@ def dedup_corpus_staged(
     BEFORE near-dup), as one operator with provably identical output.
 
     Stage 1 groups documents by content hash (md5 of the NULL-folded
-    text) and keeps the min-id representative per group: one bounded
-    shuffle of (id, 32-char fp) pairs, never the text. Stage 2 runs the
-    full near-dup pipeline on representatives only.
+    text) and keeps the min-id representative per group —
+    :func:`dedup_canonical` with no key columns: one bounded shuffle of
+    (id, 32-char fp) pairs, never the text. Stage 2 runs the full
+    near-dup pipeline on representatives only.
 
     Output == ``dedup_corpus(docs, ...)`` EXACTLY (pinned in
     tests/test_corpus.py, and the declared query grades against the same
@@ -1174,7 +1164,7 @@ def dedup_corpus_staged(
     removes the quadratic clique term entirely — for the price of one
     hash groupBy.
 
-    ``canonical_cols`` (round 11, VERDICT r10 #8) prepends the STANDARD
+    ``canonical_cols`` prepends the STANDARD
     stage 0 of the CCNet/RefinedWeb order — :func:`dedup_canonical` on
     (canonical_cols..., content fp) — before the exact collapse. Output
     is STILL provably unchanged: the global min-id of an exact-dup class
@@ -1188,18 +1178,13 @@ def dedup_corpus_staged(
         docs = dedup_canonical(
             docs, text_col, id_col, key_cols=tuple(canonical_cols)
         )
-    fp = F.md5(F.coalesce(F.col(text_col), F.lit("")))
-    reps = (
-        docs.select(F.col(id_col), fp.alias("_fp"))
-        .groupBy("_fp")
-        .agg(F.min(id_col).alias(id_col))
-        .select(id_col)
-    )
     # persisted: dedup_corpus consumes its input from three branches
     # (pair generation, the component node list, the final semi-join) —
     # without the persist each branch re-runs the scan + md5 collapse
     # (measured 5x at sf0.1)
-    rep_docs = docs.join(reps, id_col, "left_semi").transform(scratch_persist)
+    rep_docs = dedup_canonical(docs, text_col, id_col, key_cols=()).transform(
+        scratch_persist
+    )
     return dedup_corpus(
         rep_docs, text_col, id_col, n=n, threshold=threshold,
         max_iter=max_iter,
@@ -1215,7 +1200,7 @@ def dedup_canonical(
 ) -> DataFrame:
     """Canonical-key exact dedup — the FIRST stage of the standard
     web-corpus order (CCNet/RefinedWeb: canonical-key dedup BEFORE text
-    near-dup; VERDICT r10 #8): group documents by their canonical
+    near-dup): group documents by their canonical
     identity — the ``key_cols`` (URL/source/shard in production; the
     fixtures carry ``source``, and
     :func:`checkatron_spark.functions.text.canonical_url` supplies the
@@ -1287,15 +1272,13 @@ def substring_dup_pairs(
 
     @F.pandas_udf(_Arr(_Long()))
     def _fps(texts: pd.Series) -> pd.Series:
-        # round 12 (VERDICT r11 #3): the first cut ran TWO O(len) python
-        # loops per doc — str-slice+encode+hexdigest-parse per gram, then
-        # an O(ng*w) window-min set comprehension. Now: encode ONCE and
-        # md5 memoryview byte-slices when the text is ASCII (byte offsets
-        # == char offsets; non-ASCII keeps the char-slice path — same
-        # bytes hashed either way), take the 60-bit value from the raw
-        # digest (int.from_bytes >> 4 == int(hexdigest[:15], 16)), and
-        # replace the window min with numpy sliding_window_view (a view,
-        # no copy) + unique. Pinned bit-identical to the r11 kernel in
+        # one O(len) pass per doc: encode ONCE and md5 memoryview byte-
+        # slices when the text is ASCII (byte offsets == char offsets;
+        # non-ASCII keeps the char-slice path — same bytes hashed either
+        # way), take the 60-bit value from the raw digest (int.from_bytes
+        # >> 4 == int(hexdigest[:15], 16)), and take the window min with
+        # numpy sliding_window_view (a view, no copy) + unique. Pinned
+        # bit-identical to the per-gram hexdigest reference kernel in
         # tests/test_winnow.py; head-to-head in SCALE.md.
         import hashlib
 
@@ -1349,13 +1332,7 @@ def substring_dup_pairs(
         F.col(id_col).alias("_id"), F.explode(_fps(F.col(text_col))).alias("fp")
     ).transform(scratch_persist)
     if max_fp_freq is not None:
-        hot = (
-            fps.groupBy("fp")
-            .agg(F.count(F.lit(1)).alias("_n"))
-            .filter(F.col("_n") > max_fp_freq)
-            .select("fp")
-        )
-        fps = fps.join(F.broadcast(hot), "fp", "left_anti")
+        fps = fps.join(F.broadcast(_hot(fps, "fp", max_fp_freq)), "fp", "left_anti")
     a = fps.select(F.col("_id").alias("id_a"), "fp")
     b = fps.select(F.col("_id").alias("id_b"), "fp")
     return (
@@ -1385,10 +1362,9 @@ def neardup_minhash_banded(
     ``array_intersect``), so false positives cannot survive. Measured 1.4x
     faster than the MLlib pipeline at sf0.1 with an identical pair set.
 
-    AND-amplification (round 7 — the realistic-corpus probe's structural
-    catch): a band is ``band_r`` consecutive minhashes and collides only
-    when ALL agree — P(candidate | s) = 1-(1-s^r)^b. With r=1 (OR-only,
-    the old shape and MLlib's only shape) background token overlap makes
+    AND-amplification: a band is ``band_r`` consecutive minhashes and
+    collides only when ALL agree — P(candidate | s) = 1-(1-s^r)^b. With
+    r=1 (OR-only, MLlib's only shape) background token overlap makes
     P ≈ b·s0 for every pair, so candidates grow ∝ N²·s0 — measured 62x
     candidate growth at a 10x corpus step on a zipf-vocabulary corpus
     with linear TRUE pairs. r=2 squares the background term
@@ -1399,10 +1375,9 @@ def neardup_minhash_banded(
     ``num_hashes`` must divide by ``band_r`` — a short trailing band
     would silently reintroduce an OR-only (quadratic) leak.
 
-    Scale shape: shuffle key = (band, value) — work tracks genuinely-
-    colliding content; a hot band value (many identical docs) is the skew
-    risk and inherits AQE skew splitting. Universal-hash family
-    ``(a*x + b) mod p`` over 61-bit md5 shingle hashes, p = 2^61-1.
+    Candidates come from :func:`_band_candidates` and are verified by
+    :func:`_jaccard_verified`. Universal-hash family ``(a*x + b) mod p``
+    over 61-bit md5 shingle hashes, p = 2^61-1.
 
     Returns (id_a, id_b, jaccard) with id_a < id_b, jaccard >= threshold
     (exact values, unlike the _est column of the MLlib variant).
@@ -1410,15 +1385,11 @@ def neardup_minhash_banded(
     import hashlib
     import random
 
-    if num_hashes % band_r:
-        raise ValueError(
-            f"neardup_minhash_banded: num_hashes ({num_hashes}) must be a "
-            f"multiple of band_r ({band_r}) — a short trailing band is an "
-            "OR-only (quadratic-candidate) leak"
-        )
+    _check_bands("neardup_minhash_banded", num_hashes, band_r)
     p = (1 << 61) - 1
     rng = random.Random(seed)
     ab = [(rng.randrange(1, p), rng.randrange(0, p)) for _ in range(num_hashes)]
+    shingle = _shingler(n)
 
     @F.pandas_udf(
         "struct<sh: array<string>, sig: array<long>>"
@@ -1426,18 +1397,12 @@ def neardup_minhash_banded(
     def _sh_sig(texts: pd.Series) -> pd.DataFrame:
         shs, sigs = [], []
         for t in texts:
-            words = _WS_RE.split((t or "").strip(" "))
-            if len(words) < n:
-                grams = dict.fromkeys([" ".join(words)])
-            else:
-                grams = dict.fromkeys(
-                    " ".join(words[i : i + n]) for i in range(len(words) - n + 1)
-                )
+            grams = shingle(t)
             xs = [
                 int(hashlib.md5(g.encode("utf-8")).hexdigest()[:15], 16)
                 for g in grams
             ]
-            shs.append(list(grams))
+            shs.append(grams)
             sigs.append([min((a * x + b) % p for x in xs) for a, b in ab])
         return pd.DataFrame({"sh": shs, "sig": sigs})
 
@@ -1459,30 +1424,7 @@ def neardup_minhash_banded(
             )
         ).alias("_bi", "_bv"),
     )
-    cand = (
-        bands.alias("a")
-        .join(
-            bands.alias("b"),
-            (F.col("a._bi") == F.col("b._bi"))
-            & (F.col("a._bv") == F.col("b._bv"))
-            & (F.col("a._id") < F.col("b._id")),
-        )
-        .select(F.col("a._id").alias("id_a"), F.col("b._id").alias("id_b"))
-        .distinct()
-    )
-    av = base.select(F.col("_id").alias("id_a"), F.col("_sh").alias("_sha"))
-    bv = base.select(F.col("_id").alias("id_b"), F.col("_sh").alias("_shb"))
-    inter = F.size(F.array_intersect("_sha", "_shb")).cast("double")
-    union = (
-        F.size("_sha").cast("double") + F.size("_shb").cast("double") - inter
-    )
-    return (
-        cand.join(av, "id_a")
-        .join(bv, "id_b")
-        .withColumn("jaccard", inter / union)
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
+    return _jaccard_verified(_band_candidates(bands), base, base, threshold)
 
 
 def split_by_cluster(

@@ -778,11 +778,13 @@ def ann_lsh_topk(
     from pyspark.ml.feature import BucketedRandomProjectionLSH
     from pyspark.ml.functions import array_to_vector
 
+    from checkatron_spark.session import scratch_checkpoint
+
     def normed(df, out_id):
         # the norm is HOISTED into a column first: HOF lambdas are
         # interpreted with no CSE, so an inline l2_norm would re-run the
-        # O(d) fold once per ELEMENT — O(d^2) per row (review r9); zero-
-        # norm/NULL embeddings dropped (ANSI divide-by-zero). The final
+        # O(d) fold once per ELEMENT — O(d^2) per row; zero-norm/NULL
+        # embeddings dropped (ANSI divide-by-zero). The final scratch
         # localCheckpoint is a deliberate OPTIMIZER BARRIER: MLlib's hash
         # UDF predicates get pushed below the filter and combined with it,
         # and conjunct order is not guaranteed — a degenerate row then
@@ -791,7 +793,7 @@ def ann_lsh_topk(
         # Cost is one materialization of the cleaned vectors — acceptable
         # for this MLlib API-parity surface (the declared scale paths are
         # IVF / banded MinHash).
-        return (
+        return scratch_checkpoint(
             df.select(
                 F.col(id_col).alias(out_id),
                 F.col(vec_col).alias("_raw"),
@@ -819,8 +821,8 @@ def ann_lsh_topk(
                         ),
                     )
                 ).alias("_nv"),
-            )
-            .localCheckpoint(eager=False)
+            ),
+            eager=False,
         )
 
     vecs = normed(vectors, "neighbor_id")

@@ -56,14 +56,16 @@ def get_spark(app_name: str = "checkatron_spark", cpus: str | int | None = None)
 # ---------------------------------------------------------------------------
 # Scratch-cache registry: operators persist intermediate frames that are
 # consumed several times WITHIN one query's DAG (shingle tables, LSH
-# features, funnel stages).  The frames have no terminal action inside the
-# operator — the caller collects — so the operator can't unpersist them
-# itself.  Left alone they accumulate in the CacheManager across a long
-# driver session (150 queries, one JVM).  Operators register through
-# scratch_persist(); release_scratch() drops everything registered so far
-# and is invoked at the START of every __spark_entry__ queries() call —
-# the previous query has been collected by then, the current one hasn't
-# persisted anything yet.
+# features, funnel stages), and iterative operators cut lineage with
+# localCheckpoint.  The frames have no terminal action inside the
+# operator — the caller collects — so the operator can't free them
+# itself.  Left alone they accumulate in the CacheManager (persists) or
+# the block manager (checkpoints) across a long Spark session (150
+# queries, one JVM).  Operators register through scratch_persist() and
+# scratch_checkpoint(); release_scratch() frees everything registered so
+# far and is invoked at the START of every __spark_entry__ queries() call
+# — the previous query has been collected by then, the current one hasn't
+# registered anything yet.
 # ---------------------------------------------------------------------------
 
 _SCRATCH: list = []
@@ -76,6 +78,33 @@ def scratch_persist(df, level=None):
     df = df.persist(level or StorageLevel.MEMORY_AND_DISK)
     _SCRATCH.append(df)
     return df
+
+
+def scratch_checkpoint(df, eager: bool = True):
+    """localCheckpoint() + register for release before the next contract
+    query. A checkpoint cannot recompute: read it only before its release."""
+    df = df.localCheckpoint(eager)
+    _SCRATCH.append(df)
+    return df
+
+
+def release(df) -> bool:
+    """Free one registered scratch frame now; True when it was freed.
+
+    The one release routine: a persisted frame drops its cache entry, a
+    scratch_checkpoint frame its RDD's blocks. An iterative operator
+    calls it on each superseded checkpoint as soon as the next one has
+    materialized, instead of leaving the blocks to the JVM's GC-paced
+    ContextCleaner."""
+    _SCRATCH[:] = [d for d in _SCRATCH if d is not df]
+    try:
+        if df.is_cached:
+            df.unpersist(blocking=False)
+        else:  # the checkpoint's RDD rides Spark's LogicalRDD internals
+            df._jdf.queryExecution().logical().rdd().unpersist(False)
+        return True
+    except Exception:  # noqa: BLE001 — dead session or moved internals:
+        return False  # the ContextCleaner frees it at GC
 
 
 def scratch_tempdir(prefix: str) -> str:
@@ -111,16 +140,8 @@ def scratch_tempdir(prefix: str) -> str:
 
 
 def release_scratch() -> int:
-    """Unpersist every registered scratch frame; returns how many."""
-    n = 0
-    while _SCRATCH:
-        df = _SCRATCH.pop()
-        try:
-            df.unpersist(blocking=False)
-            n += 1
-        except Exception:  # noqa: BLE001  (dead session — nothing to free)
-            pass
-    return n
+    """Free every registered scratch frame; returns how many."""
+    return sum(release(df) for df in list(_SCRATCH))
 
 
 from contextlib import contextmanager
@@ -128,7 +149,7 @@ from contextlib import contextmanager
 
 @contextmanager
 def scratch_cache():
-    """Sanctioned release point for LIBRARY callers (ADVICE r5): operators
+    """Sanctioned release point for LIBRARY callers: operators
     composed outside the ``__spark_entry__`` contract wrapper (which drains
     the registry per ``queries()`` call) would otherwise accumulate
     persisted frames without bound in a long-lived session.  Wrap each
@@ -137,11 +158,13 @@ def scratch_cache():
         with scratch_cache():
             result = dedup_corpus(docs, ...).collect()
 
-    Frames registered inside the block are unpersisted on exit (collect
-    first — unpersist is correctness-safe, a later action just recomputes).
+    Frames registered inside the block are freed on exit (collect first —
+    a later action recomputes a released persist, but fails on a released
+    checkpoint, e.g. ``connected_components`` labels).
     Blocks release EVERYTHING registered so far, matching the contract
     wrapper's previous-query-is-done semantics; nesting therefore releases
-    the outer block's frames early, which is safe for the same reason."""
+    the outer block's frames early — safe for a persist, which recomputes,
+    not for a checkpoint the outer block still reads."""
     try:
         yield
     finally:

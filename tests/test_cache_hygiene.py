@@ -18,8 +18,14 @@ REQUIRES_TESTDATA = True  # auto-skip without driver fixtures (conftest)
 SF_DIR = os.environ.get("TEST_SF_DIR", "/root/testdata/sf0.001")
 
 # cache-heavy contract queries: n-gram jaccard + minhash persist shingle /
-# feature frames, the funnel persists three stage frames
-HEAVY = ["neardup_ngram_jaccard", "neardup_minhash_lsh", "curation_funnel"]
+# feature frames, the funnel persists three stage frames, corpus dedup
+# leaves its final connected-components checkpoint for the caller
+HEAVY = [
+    "neardup_ngram_jaccard",
+    "neardup_minhash_lsh",
+    "curation_funnel",
+    "dedup_corpus_e2e",
+]
 
 
 def _n_persistent(spark) -> int:

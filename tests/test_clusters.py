@@ -93,6 +93,24 @@ def test_unconverged_at_max_iter_raises(spark):
         connected_components(nodes, pairs, max_iter=2)
 
 
+def test_release_scratch_frees_checkpoints_of_an_unconverged_run(spark):
+    """Every connected_components checkpoint goes through the scratch
+    registry, so the ones alive when the loop raises are freed too."""
+    import pytest
+
+    from checkatron_spark.session import release_scratch
+
+    release_scratch()
+    jsc = spark.sparkContext._jsc
+    baseline = jsc.getPersistentRDDs().size()
+    nodes = spark.createDataFrame([(i,) for i in range(4)], ["_id"])
+    pairs = spark.createDataFrame([(0, 1), (1, 2), (2, 3)], ["id_a", "id_b"])
+    with pytest.raises(RuntimeError, match="still changing"):
+        connected_components(nodes, pairs, max_iter=1)
+    release_scratch()
+    assert jsc.getPersistentRDDs().size() == baseline
+
+
 # ---------------------------------------------------------------------------
 # reelect_representatives: keep-list re-election after takedown
 # ---------------------------------------------------------------------------

@@ -4,7 +4,10 @@ Cross-bench totals swing ±15-17% between host epochs (SCALE.md), so
 per-change evidence comes from ONE JVM timing the queries under test back
 to back (min-of-N each), not from comparing two full bench runs. Each
 timed run also reports its Spark job count (the ``nextJobId()`` range it
-spans), which does not drift with host load.
+spans), which does not drift with host load. ``leaked`` is how many more
+persistent RDDs (persisted frames and local checkpoints) the JVM holds
+after the query's closing ``release_scratch()`` than before it started:
+anything above 0 is scratch that bypassed the registry.
 ``--build-only`` times DataFrame construction alone (no action): the
 driver-side Catalyst/py4j cost of building a query, tracked separately
 from execution.
@@ -16,9 +19,9 @@ Usage:
   python tools/probe.py --tag before --explain plans/new q1
   python tools/probe.py --build-only q1            # construction time only
 
-Timings and job counts go to stdout as one JSON line per query (and a
-plain table on stderr). The noop sink forces every column of every row,
-same methodology as bench.py.
+Timings, job counts and ``leaked`` go to stdout as one JSON line per
+query (and a plain table on stderr). The noop sink forces every column of
+every row, same methodology as bench.py.
 """
 
 from __future__ import annotations
@@ -46,6 +49,10 @@ def _next_job(spark) -> int:
     return int(spark.sparkContext._jsc.sc().dagScheduler().nextJobId())
 
 
+def _n_persistent(spark) -> int:
+    return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("queries", nargs="+")
@@ -71,6 +78,7 @@ def main() -> None:
 
     for name in args.queries:
         release_scratch()
+        held = _n_persistent(spark)
         if args.explain:
             os.makedirs(args.explain, exist_ok=True)
             df = qs[name](spark, SF_DIR)
@@ -96,6 +104,8 @@ def main() -> None:
             total = round(time.perf_counter() - t0, 3)
             runs.append((total, build, _next_job(spark) - job0))
         spark.sparkContext.setJobDescription(None)
+        release_scratch()
+        leaked = _n_persistent(spark) - held
         if not runs:
             continue  # --runs 0: plan dump only
         totals = [r[0] for r in runs]
@@ -107,6 +117,7 @@ def main() -> None:
             "median": statistics.median(totals),
             "runs": totals,
             "jobs": jobs,
+            "leaked": leaked,
             "build_min": min(builds),
             "builds": builds,
             "postwarm_min": min(totals[1:]) if len(totals) > 1 else totals[0],
@@ -114,7 +125,8 @@ def main() -> None:
         print(json.dumps(rec))
         print(
             f"[probe] {name}: min={rec['min']} median={rec['median']}"
-            f" build_min={rec['build_min']} runs={totals} jobs={jobs}",
+            f" build_min={rec['build_min']} runs={totals} jobs={jobs}"
+            f" leaked={leaked}",
             file=sys.stderr,
         )
 
