@@ -38,7 +38,7 @@ shuffle-free.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from functools import reduce
 
 from pyspark.sql import DataFrame
@@ -75,7 +75,6 @@ class DiffSpec:
     faithful: bool = False
     presence_fix: bool = False
     column_case: str = "upper"
-    extra: dict = field(default_factory=dict)
 
 
 def _prepare_side(
@@ -132,11 +131,13 @@ def _prepare_side(
         return df.select(*cols)
 
 
-def _status_col(b: str, a: str, alias: str, equal: str | None = None) -> str:
-    """Per-column status CASE (full_compare.sql.j2:77-85) as a SQL string
-    over the (already-quoted) joined-frame column names. ``equal``
-    overrides the match predicate (tolerance modes); default is the
-    reference's plain ``=``.
+def _status_rule(b: str, a: str, equal: str | None = None) -> str:
+    """Per-column status CASE (full_compare.sql.j2:77-85) as an unaliased
+    SQL expression over two SQL operands, ``b`` the before/baseline side.
+    ``equal`` overrides the match predicate (tolerance modes); default is
+    the reference's plain ``=``. The one spelling of the 0/1/2/3 rule:
+    :func:`diff`, ``map_diff``, ``array_diff`` and ``stream_diff`` all
+    render it.
 
     Rendered as the value-identical nested-IF form rather than the
     reference's literal 5 branches: each NULL test appears once instead
@@ -150,7 +151,7 @@ def _status_col(b: str, a: str, alias: str, equal: str | None = None) -> str:
     return (
         f"CAST(CASE WHEN {b} IS NULL THEN IF({a} IS NULL, 0, 2)"
         f" WHEN {a} IS NULL THEN 3"
-        f" WHEN {eq} THEN 0 ELSE 1 END AS INT) AS {_q(alias)}"
+        f" WHEN {eq} THEN 0 ELSE 1 END AS INT)"
     )
 
 
@@ -314,15 +315,15 @@ def diff(
     if tolerances:
         tolerances = {_norm(c, column_case): v for c, v in tolerances.items()}
     status_cols = [
-        _status_col(
+        _status_rule(
             _q(_B + c),
             _q(_A + c),
-            c,
             _equal_pred(
                 _q(_B + c), _q(_A + c), c, tolerances, ts_trunc,
                 b_types.get(c, a_types.get(c)), a_types.get(c, b_types.get(c)),
             ),
         )
+        + f" AS {_q(c)}"
         for c in all_cols
     ]
     return joined.selectExpr(row_status, *key_cols, *status_cols)

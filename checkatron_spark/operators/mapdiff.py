@@ -24,6 +24,8 @@ from functools import reduce
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from checkatron_spark.operators.diff import _status_rule
+
 __all__ = ["map_diff", "array_diff"]
 
 
@@ -74,16 +76,7 @@ def map_diff(
         F.col("a_m"),
         F.explode(all_keys).alias("entry_key"),
     )
-    bv = F.col("b_m")[F.col("entry_key")]
-    av = F.col("a_m")[F.col("entry_key")]
-    status = (
-        F.when(bv.isNull() & av.isNull(), F.lit(0))
-        .when(bv.isNull() & av.isNotNull(), F.lit(2))
-        .when(bv.isNotNull() & av.isNull(), F.lit(3))
-        .when(bv == av, F.lit(0))
-        .otherwise(F.lit(1))
-        .cast("int")
-    )
+    status = F.expr(_status_rule("b_m[entry_key]", "a_m[entry_key]"))
     return exploded.select(
         "_row_status",
         *[f"K_{k}" for k in keys],
@@ -137,15 +130,12 @@ def array_diff(
         F.col("a_v"),
         F.explode(F.sequence(F.lit(0), n - 1)).alias("pos"),
     )
-    bv = F.element_at(F.col("b_v"), F.col("pos") + 1)
-    av = F.element_at(F.col("a_v"), F.col("pos") + 1)
-    status = (
-        F.when(bv.isNull() & av.isNull(), F.lit(0))
-        .when(bv.isNull() & av.isNotNull(), F.lit(2))
-        .when(bv.isNotNull() & av.isNull(), F.lit(3))
-        .when(bv == av, F.lit(0))
-        .otherwise(F.lit(1))
-        .cast("int")
+    # try_element_at: a position past one array's end reads as NULL
+    # (element_at raises there under ANSI mode)
+    status = F.expr(
+        _status_rule(
+            "try_element_at(b_v, pos + 1)", "try_element_at(a_v, pos + 1)"
+        )
     )
     return exploded.select(
         "_row_status",

@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import LongType, StructField, StructType
 
+from checkatron_spark.operators.diff import _q, _status_rule
 from checkatron_spark.session import scratch_tempdir
 
 __all__ = [
@@ -255,8 +256,9 @@ def stream_diff(
 
     Stream-static left join (Spark broadcasts/rescans the static side per
     micro-batch; no state is kept, so this runs forever at constant
-    memory). Per shared column: 0 match (incl. both NULL), 1 different,
-    2 NULL-in-stream-only, 3 NULL-in-baseline-only; ``_row_status`` = 4
+    memory). Per shared column, with the baseline as the before side:
+    0 match (incl. both NULL), 1 different, 2 NULL in baseline only,
+    3 NULL in stream only; ``_row_status`` = 4
     when the key is absent from the baseline (a "new" row, mirroring
     missing-in-before). Missing-in-stream (5) is undefined while the
     stream is unbounded — absence isn't observable until a watermark
@@ -271,18 +273,10 @@ def stream_diff(
         c = stream[k].eqNullSafe(b[f"_bk_{k}"])
         cond = c if cond is None else cond & c
     joined = stream.join(b, cond, "left")
-    status_cols = []
-    for c in compare_cols:
-        s, bl = F.col(c), F.col(f"_bv_{c}")
-        status_cols.append(
-            F.when(bl.isNull() & s.isNull(), F.lit(0))
-            .when(bl.isNull() & s.isNotNull(), F.lit(2))
-            .when(bl.isNotNull() & s.isNull(), F.lit(3))
-            .when(bl == s, F.lit(0))
-            .otherwise(F.lit(1))
-            .cast("int")
-            .alias(f"status_{c}")
-        )
+    status_cols = [
+        F.expr(_status_rule(_q(f"_bv_{c}"), _q(c))).alias(f"status_{c}")
+        for c in compare_cols
+    ]
     row_status = (
         F.when(F.col("_b_present").isNull(), F.lit(4))
         .otherwise(F.lit(None))

@@ -169,6 +169,34 @@ def test_faithful_mode_equivalence(spark, duck):
     assert_same_rows(d_faithful, rows, cols)
 
 
+def test_diff_from_spec_equals_diff(spark):
+    """diff_from_spec passes every DiffSpec field through to diff()."""
+    from collections import Counter
+
+    from checkatron_spark import DiffSpec, diff_from_spec
+
+    b = spark.createDataFrame(
+        [(None, "a", 1), (2, "b", 2), (3, "c", 3)], "k1 int, val string, n int")
+    a = spark.createDataFrame(
+        [(None, "a", 1), (2, "B", 2), (4, "d", 4)], "k1 int, val string, n int")
+    spec = DiffSpec(
+        keys=["k1"], before_where="n < 3", after_where="n > 0",
+        faithful=True, presence_fix=True, column_case="lower",
+    )
+    got = diff_from_spec(b, a, spec)
+    want = diff(
+        b, a, ["k1"], before_where="n < 3", after_where="n > 0",
+        faithful=True, presence_fix=True, column_case="lower",
+    )
+    assert got.columns == want.columns
+    assert Counter(map(tuple, got.collect())) == Counter(
+        map(tuple, want.collect())
+    )
+    assert "val" in got.columns  # column_case reached diff()
+    # presence_fix reached diff(): the NULL-key row matched on both sides
+    assert got.filter("K_k1 IS NULL").collect()[0]["_row_status"] is None
+
+
 def test_diff_summary(spark, duck):
     b = spark.createDataFrame(
         [(1, "a"), (2, "b"), (3, "c")], "k1 int, val string")
@@ -295,13 +323,11 @@ def test_selectexpr_projection_matches_python_reference_on_adversarial_schema(
 
 
 def test_status_case_nested_if_equals_reference_truth_table(spark):
-    """Round 14: _status_col renders the nested-IF form (smaller
-    expression tree for the optimizer at DESCRIBE width); pin its truth
-    table against the reference's literal 5-branch CASE on every
-    (NULL, NULL), (NULL, x), (x, NULL), (x, x), (x, y) combination —
-    including NULL join keys and schema drift."""
-    from pyspark.sql import functions as F
-
+    """_status_rule renders the nested-IF form (smaller expression tree
+    for the optimizer at DESCRIBE width); pin its truth table against the
+    reference's literal 5-branch CASE on every (NULL, NULL), (NULL, x),
+    (x, NULL), (x, x), (x, y) combination — including NULL join keys and
+    schema drift."""
     from checkatron_spark.operators.diff import diff
 
     b = spark.createDataFrame(

@@ -102,16 +102,14 @@ def test_check_window_rotation():
     tail = names[len(names) - len(demoted):]
     assert tail == demoted, "green queries must sit contiguously at the back"
     assert len(names) == len(set(names))
-    # round 13 (unified age-ordered tail): within the green tail, the
-    # ONLY ordering key is driver-proof age — oldest green first, name
-    # tiebreak. Staleness no longer jumps the queue (the sf0.1 sweep
-    # re-proves stale entries bit-exact every round; semantically-changed
-    # queries are pinned via _CHECK_FIRST instead).
+    # within the green tail the only ordering key is proof age:
+    # oldest green first, name tiebreak (a query whose declared result
+    # changed is fronted through _CHECK_FIRST instead)
     keys = [(entrymod._round_no(green[n]), n) for n in demoted]
     assert keys == sorted(keys), (
         "green tail must be ordered oldest driver proof first"
     )
-    # within the never-checked segment, this round's additions
+    # within the never-green segment, newly declared queries
     # (_CHECK_LAST) must come after the older backlog
     nevers = [n for n in names[len(front):] if n not in green]
     last_flags = [n in set(entrymod._CHECK_LAST) for n in nevers]
@@ -120,154 +118,59 @@ def test_check_window_rotation():
     )
 
 
-def test_stale_green_detection(monkeypatch):
-    full = entrymod._queries_unordered()
-    green = entrymod._greens_on_disk()
-    # source attribution: a workloads-defined diff query must be tied to
-    # both its defining module and the operators it composes
-    files = entrymod._query_source_files(full["diff_orders"])
-    assert any(f.endswith("workloads.py") for f in files)
-    assert any("operators" in f for f in files)
-    # function-LOCAL imports must be traced too: curation_funnel pulls
-    # corpus/sampling inside its body, stream_admission_gate pulls
-    # functions/text — missing them would leave their stale greens
-    # undetectable, the exact hazard the mechanism exists for
-    funnel = entrymod._query_source_files(full["curation_funnel"])
-    assert any(f.endswith("corpus.py") for f in funnel)
-    assert any(f.endswith("sampling.py") for f in funnel)
-    gate = entrymod._query_source_files(full["stream_admission_gate"])
-    assert any(f.endswith("functions/text.py") for f in gate)
-    # git failure must degrade to "nothing stale", never crash queries()
-    import subprocess
-
-    def _boom(*a, **k):
-        raise OSError("no git")
-
-    monkeypatch.setattr(subprocess, "run", _boom)
-    assert entrymod._stale_greens(full, green) == set()
-    assert len(entrymod.queries()) == len(full)
-
-
-def test_untracked_module_flips_staleness(monkeypatch):
-    """ADVICE r9: `git diff --name-only <commit>` omits untracked files, so
-    a query depending on a brand-new uncommitted module used to keep its
-    stale green until the file was committed. Simulated git: nothing
-    tracked changed, but a module in diff_orders' closure is reported
-    untracked — the query must go stale (git show has no old source, so
-    the fingerprint proof degrades to stale, the conservative direction)."""
-    import subprocess
-
-    real_run = subprocess.run
-
-    def fake_run(cmd, **kw):
-        if cmd[:1] == ["git"]:
-            if "ls-files" in cmd:
-                out = "checkatron_spark/workloads.py\n"
-            elif "log" in cmd:
-                out = "f" * 40 + "\n"
-            elif "diff" in cmd:
-                out = ""
-            elif "show" in cmd:
-                raise subprocess.CalledProcessError(128, cmd)
-            else:
-                return real_run(cmd, **kw)
-
-            class R:
-                stdout = out
-
-            return R()
-        return real_run(cmd, **kw)
-
-    monkeypatch.setattr(subprocess, "run", fake_run)
-    full = entrymod._queries_unordered()
-    green = {"diff_orders": "CORRECTNESS_r09.json"}
-    stale = entrymod._stale_greens_or_none(full, green)
-    assert stale is not None and "diff_orders" in stale
-
-
-def test_forced_rotation_of_evergreen_queries():
-    """VERDICT r9 #3: no query's driver verification may depend SOLELY on
-    the fingerprint closure — the K oldest-driver-green queries must
-    re-enter the 50-slot driver window every round regardless of
-    staleness, and must never be pruned."""
-    full = entrymod._queries_unordered()
-    green = entrymod._greens_on_disk()
-    stale = entrymod._stale_greens(full, green)
-    rotate = entrymod._rotation_picks(full, green, stale)
-    if not green:
-        assert rotate == []
-        return
-    n_fresh = len([n for n in green if n in full and n not in stale
-                   and n not in set(entrymod._CHECK_FIRST)])
-    # round 11 (VERDICT r10 #6): the quota scales with the contract —
-    # max(floor, ceil(fresh/8)) — so the grade-age bound holds as the
-    # declared set grows instead of silently degrading past 80 queries
-    assert len(rotate) == min(entrymod._rotate_k(n_fresh), n_fresh)
-    # the picks are exactly the oldest greens (age, then name)
-    ages = [entrymod._round_no(green[n]) for n in rotate]
-    others = [
-        entrymod._round_no(green[n]) for n in green
-        if n in full and n not in stale
-        and n not in set(entrymod._CHECK_FIRST) and n not in set(rotate)
-    ]
-    assert not others or max(ages) <= min(others)
-    # they sit inside the driver's 50-slot window DIRECTLY AFTER the
-    # higher-priority segments (fronted / never-checked / stale re-grades
-    # rightfully outrank rotation); however many of the 50 slots remain
-    # after those segments must go to the rotation picks, in order
-    names = list(entrymod.queries().keys())
-    window = names[:50]
-    ahead = [
-        n for n in names
-        if n in set(entrymod._CHECK_FIRST) or n not in green or n in stale
-    ]
-    slots_left = max(0, 50 - len(ahead))
-    expect_in = rotate[: min(slots_left, len(rotate))]
-    missing = [n for n in expect_in if n not in window]
-    assert not missing, f"rotation picks crowded out of open slots: {missing}"
-    # and pruning must never drop them
-    prunable = entrymod._prunable(full, green, stale, keep=set(rotate))
-    assert not set(rotate) & set(prunable)
-
-
 def test_rotation_simulation_bounds_grade_age():
-    """Simulate the round-robin AT THREE CONTRACT SIZES (round 11,
-    VERDICT r10 #6 + review r11): N ever-green queries, k(N) rotated per
-    round, AND the 50-slot driver window modeled — only the picks that
-    fit after the ~13 fronted queries are actually graded (review r11:
-    the first cut asserted the bound on _rotation_picks directly,
-    ignoring the window cap, so the bound claim was vacuous past the
-    window). The <= AGE+1-round promise is asserted up to the documented
-    validity limit (fresh <= 8 x window budget = 240); beyond it the
-    honest bound ceil(N/K)+1 with K window-capped is what must hold.
-    N=300 exercises the cap (K=30, bound 11), N=80 the floor (K=10),
-    and the CURRENT contract size keeps the pin tracking reality."""
+    """Simulate the grader on _window_order itself at three contract sizes
+    (80, the current 221, 300): each round it grades the first 50 names,
+    which turns them green at that round. _CHECK_FIRST takes its slots
+    every round, a third of the synthetic queries start never-green and
+    the rest start with staggered old greens. After a warm-up, no query
+    may wait more than ceil(N / (50 - len(_CHECK_FIRST))) + 1 rounds
+    between two grades."""
     import math
 
-    window_slots = 50 - len(entrymod._CHECK_FIRST)
-    sizes = [80, 300, len(entrymod._queries_unordered())]
-    for N in sizes:
-        K = entrymod._rotate_k(N)
-        assert entrymod._ROTATE_K_FLOOR <= K <= entrymod._ROTATE_WINDOW_BUDGET
-        # every pick must fit the window in the steady state (no
-        # never-checked/stale backlog) — otherwise the quota is a lie
-        assert K <= window_slots
-        eff = min(K, window_slots)
-        bound = math.ceil(N / eff) + 1
-        if N <= entrymod._ROTATE_AGE_ROUNDS * entrymod._ROTATE_WINDOW_BUDGET:
-            assert bound <= entrymod._ROTATE_AGE_ROUNDS + 1
-        full = {f"q{i:03d}": None for i in range(N)}
-        green = {f"q{i:03d}": "CORRECTNESS_r01.json" for i in range(N)}
-        last_graded = {n: 1 for n in full}
-        for rnd in range(2, 40):
-            picks = entrymod._rotation_picks(full, green, stale=set())
-            assert len(picks) == K
-            for n in picks[:eff]:  # only windowed picks get graded
-                green[n] = f"CORRECTNESS_r{rnd:02d}.json"
+    window = 50
+    front = list(entrymod._CHECK_FIRST)
+    for N in (80, 221, 300):
+        bound = math.ceil(N / (window - len(front))) + 1
+        full = dict.fromkeys(front + [f"q{i:03d}" for i in range(N)])
+        green = {
+            f"q{i:03d}": f"CORRECTNESS_r{i % 3 + 1}.json"
+            for i in range(N) if i % 3
+        }
+        last_graded = {n: 0 for n in full}
+        for n, f in green.items():
+            last_graded[n] = entrymod._round_no(f)
+        for rnd in range(4, 4 + 4 * bound):
+            order = entrymod._window_order(full, green)
+            assert sorted(order) == sorted(full)
+            for n in order[:window]:
+                green[n] = f"CORRECTNESS_r{rnd}.json"
                 last_graded[n] = rnd
             worst = max(rnd - r for r in last_graded.values())
-            if rnd > bound:
+            if rnd >= 4 + bound:
                 assert worst <= bound, (N, rnd, worst, bound)
+
+
+def test_queries_is_the_whole_contract_without_git(monkeypatch):
+    """queries() is every declared query, in an order that depends only on
+    the CORRECTNESS_r*.json files: it starts no subprocess and parses no
+    source, so its result is identical with both made impossible."""
+    import ast
+    import subprocess
+
+    names = list(entrymod.queries())
+
+    def _boom(*a, **k):
+        raise OSError("queries() must not start a process or parse source")
+
+    with monkeypatch.context() as m:
+        m.setattr(subprocess, "run", _boom)
+        m.setattr(subprocess, "Popen", _boom)
+        m.setattr(ast, "parse", _boom)
+        again = [list(entrymod.queries()) for _ in range(2)]
+    assert again == [names, names]
+    assert len(names) == len(set(names))
+    assert set(names) == set(entrymod.full_queries())
 
 
 def test_every_query_has_an_oracle():
@@ -305,11 +208,10 @@ def test_no_risky_oracle_output_types(duck_views):
 
 
 def test_greens_on_disk_numeric_round_sort(monkeypatch, tmp_path):
-    """VERDICT r5 item 1 guard: round files must sort NUMERICALLY on the
-    r(\\d+) suffix — lexicographic glob order puts CORRECTNESS_r100.json
-    before r11/r9, so the 'latest green' winner (and with it the whole
-    stale-green rotation) would silently be an old round once rounds reach
-    three digits."""
+    """Round files must sort NUMERICALLY on the r(\\d+) suffix:
+    lexicographic glob order puts CORRECTNESS_r100.json before r11/r9, so
+    the 'latest green' winner (and with it the window order) would
+    silently be an old round once rounds reach three digits."""
     import json
 
     def row(hash_match):
@@ -536,98 +438,6 @@ def test_latest_sweep_covers_current_contract():
     )
 
 
-def test_cap_breach_is_visible_not_silent(monkeypatch, capsys):
-    """ADVICE r13: when the prunable pool cannot absorb the overflow the
-    returned dict legitimately exceeds _DRIVER_DICT_CAP (window slots and
-    stale entries are unprunable by design) — but the breach must print a
-    warning so it reads as a deliberate contract deviation, not an
-    accident of pool arithmetic."""
-    monkeypatch.setattr(entrymod, "_prunable", lambda *a, **kw: [])
-    monkeypatch.setattr(
-        entrymod, "_DRIVER_DICT_CAP", entrymod._DRIVER_WINDOW_SLOTS
-    )
-    driver = entrymod.queries()
-    err = capsys.readouterr().err
-    if len(driver) > entrymod._DRIVER_WINDOW_SLOTS:
-        assert "WARNING" in err and "_DRIVER_DICT_CAP" in err
-    else:  # pragma: no cover — contract shrank below the window size
-        assert err == ""
-
-
-def test_driver_window_prune_invariants():
-    """Round 9 (VERDICT r8 #3): the driver-facing queries() dict is capped
-    so re-grades never queue behind an ever-green backlog, but pruning may
-    ONLY touch entries whose correctness is still independently proven:
-    fresh-green (not stale), green for >= 2 rounds, and still declared in
-    full_queries() + oracle_sql() so the sf0.1 sweep keeps grading them."""
-    driver = entrymod.queries()
-    full = entrymod.full_queries()
-    green = entrymod._greens_on_disk()
-    stale_opt = entrymod._stale_greens_or_none(
-        entrymod._queries_unordered(), green
-    )
-    # round 10: the forced-rotation picks are exempt from pruning — the
-    # invariant is over the prunable set queries() actually uses
-    rotate = set(
-        entrymod._rotation_picks(
-            entrymod._queries_unordered(), green, stale_opt or set()
-        )
-    )
-    prunable = entrymod._prunable(
-        entrymod._queries_unordered(), green, stale_opt, keep=rotate
-    )
-    # round 13: pruning may only thin the dict BEYOND the driver's
-    # 50-slot check window (the unified age-ordered tail makes those 50
-    # the grading queue — evicting one would starve the very query whose
-    # grade age the window exists to bound). The cap therefore binds only
-    # against prunable entries OUTSIDE the window; a mass-stale round
-    # (stale entries must NEVER be pruned) legitimately exceeds it too.
-    windowed = set(list(driver)[: entrymod._DRIVER_WINDOW_SLOTS])
-    assert (
-        len(driver) <= entrymod._DRIVER_DICT_CAP
-        or set(prunable) & (set(driver) - windowed) == set()
-    ), "driver dict over cap while out-of-window prunable entries remain"
-    assert set(driver) <= set(full)
-    pruned = set(full) - set(driver)
-    stale = stale_opt or set()
-    # nothing never-checked or stale may be pruned
-    assert pruned <= set(green) - stale, (
-        f"pruned queries lacking a fresh green: "
-        f"{sorted(pruned - (set(green) - stale))}"
-    )
-    # every pruned query keeps its oracle (the sweep grades full_queries)
-    osql = set(entrymod.oracle_sql())
-    assert pruned <= osql
-    # determinism: two computations agree
-    assert list(driver) == list(entrymod.queries())
-
-
-def test_prunable_ordering_and_eligibility():
-    """_prunable is pure: eligibility = fresh-green, >= 2 rounds older
-    than the newest round file, not fronted; order = NEWEST green first
-    (round 13 — the unified age-ordered tail grades oldest-first, so
-    pruning must take from the other end), name tiebreak; git-unknowable
-    staleness (None) disables pruning."""
-    def f(spark, sf):  # pragma: no cover - never called
-        raise AssertionError
-
-    full = {f"q{i}": f for i in range(6)}
-    green = {
-        "q0": "CORRECTNESS_r3.json",
-        "q1": "CORRECTNESS_r8.json",   # too recent (8 > 8-2)
-        "q2": "CORRECTNESS_r5.json",   # stale -> never prunable
-        "q3": "CORRECTNESS_r4.json",
-        "q4": "CORRECTNESS_r6.json",
-        "q5": "CORRECTNESS_r3.json",
-    }
-    stale = {"q2"}
-    assert entrymod._prunable(full, green, stale) == [
-        "q4", "q3", "q0", "q5"
-    ]
-    assert entrymod._prunable(full, green, None) == []
-    assert entrymod._prunable(full, {}, stale) == []
-
-
 def test_latest_sf1_probe_is_scale_clean():
     """Round 9 (VERDICT r8 #7): the 10x-scale probe is the scale-honesty
     gate and it must be mechanical, not hand-annotated — the NEWEST
@@ -744,25 +554,3 @@ def test_bench_and_probe_batteries_reference_declared_queries():
     batt = set(probe.PROBE) | set(probe.PROBE2) | set(probe.PROBE_DOCS)
     ghosts = [n for n in probe.ALLOW if n not in batt]
     assert not ghosts, f"ALLOW entries outside the batteries: {ghosts}"
-
-
-def test_stale_segment_orders_oldest_green_first():
-    """Round 12 introduced age ordering for the stale segment; round 13's
-    unified tail subsumes it — stale greens order by AGE like every other
-    green, with only the _CHECK_FIRST manual pins ahead of them. Pinned
-    on the LIVE ordering: the non-fronted stale names inside queries()
-    must appear in (green round, name) order."""
-    names = list(entrymod.queries().keys())
-    green = entrymod._greens_on_disk()
-    stale = entrymod._stale_greens(entrymod._queries_unordered(), green)
-    front = set(entrymod._CHECK_FIRST)
-    stale_in_order = [
-        n for n in names if n in stale and n in green and n not in front
-    ]
-    if len(stale_in_order) < 2:
-        return  # nothing to order this round — vacuously fine
-    keys = [(entrymod._round_no(green[n]), n) for n in stale_in_order]
-    assert keys == sorted(keys), (
-        "stale greens must order oldest-green-first within the tail",
-        keys[:6],
-    )

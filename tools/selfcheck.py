@@ -173,9 +173,8 @@ def main() -> int:
         for name, spec in entry.tolerances().items()
     }
     spark = get_spark()
-    # the FULL declared contract — queries() is the driver-facing view and
-    # prunes ever-green entries out of its 50-slot check window; the sweep
-    # is exactly the gate that must keep grading those (round 9)
+    # the full declared contract in declaration order (queries() holds the
+    # same entries in grading order)
     qs = entry.full_queries()
     oracles = entry.oracle_sql()
     names = sorted(qs)
