@@ -14,6 +14,8 @@ import duckdb
 import pytest
 from pyspark.sql import SparkSession
 
+from checkatron_spark.session import CACHED_PLAN_CONF
+
 TESTDATA_DIR = "/root/testdata"
 
 
@@ -31,6 +33,7 @@ def spark() -> SparkSession:
         .master("local[4]")
         .config("spark.sql.shuffle.partitions", "4")
         .config("spark.sql.adaptive.enabled", "true")
+        .config(*CACHED_PLAN_CONF)
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")

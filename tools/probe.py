@@ -4,10 +4,13 @@ Cross-bench totals swing ±15-17% between host epochs (SCALE.md), so
 per-change evidence comes from ONE JVM timing the queries under test back
 to back (min-of-N each), not from comparing two full bench runs. Each
 timed run also reports its Spark job count (the ``nextJobId()`` range it
-spans), which does not drift with host load. ``leaked`` is how many more
-persistent RDDs (persisted frames and local checkpoints) the JVM holds
-after the query's closing ``release_scratch()`` than before it started:
-anything above 0 is scratch that bypassed the registry.
+spans) and its task count (the task attempts run by the stages those jobs
+created, read from the status tracker); neither drifts with host load, and
+tasks show a query's fan-out (a scan of a 32-partition cached frame is 32
+tasks). ``leaked`` is how many more persistent RDDs (persisted frames and
+local checkpoints) the JVM holds after the query's closing
+``release_scratch()`` than before it started: anything above 0 is scratch
+that bypassed the registry.
 ``--build-only`` times DataFrame construction alone (no action): the
 driver-side Catalyst/py4j cost of building a query, tracked separately
 from execution.
@@ -19,8 +22,8 @@ Usage:
   python tools/probe.py --tag before --explain plans/new q1
   python tools/probe.py --build-only q1            # construction time only
 
-Timings, job counts and ``leaked`` go to stdout as one JSON line per
-query (and a plain table on stderr). The noop sink forces every column of
+Timings, job and task counts and ``leaked`` go to stdout as one JSON line
+per query (and a plain table on stderr). The noop sink forces every column of
 every row, same methodology as bench.py.
 """
 
@@ -47,6 +50,18 @@ def _force(df) -> None:
 
 def _next_job(spark) -> int:
     return int(spark.sparkContext._jsc.sc().dagScheduler().nextJobId())
+
+
+def _next_stage(spark) -> int:
+    return int(spark.sparkContext._jsc.sc().dagScheduler().nextStageId())
+
+
+def _tasks_since(spark, stage0: int) -> int:
+    """Task attempts run by the stages created since ``stage0``."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = spark.sparkContext.statusTracker()
+    infos = (tracker.getStageInfo(s) for s in range(stage0, _next_stage(spark)))
+    return sum(i.numCompletedTasks + i.numFailedTasks for i in infos if i)
 
 
 def _n_persistent(spark) -> int:
@@ -95,14 +110,16 @@ def main() -> None:
         for _ in range(args.runs):
             if args.build_only:
                 release_scratch()
-            job0 = _next_job(spark)
+            job0, stage0 = _next_job(spark), _next_stage(spark)
             t0 = time.perf_counter()
             df = qs[name](spark, SF_DIR)
             build = round(time.perf_counter() - t0, 3)
             if not args.build_only:
                 _force(df)
             total = round(time.perf_counter() - t0, 3)
-            runs.append((total, build, _next_job(spark) - job0))
+            runs.append(
+                (total, build, _next_job(spark) - job0, _tasks_since(spark, stage0))
+            )
         spark.sparkContext.setJobDescription(None)
         release_scratch()
         leaked = _n_persistent(spark) - held
@@ -111,12 +128,14 @@ def main() -> None:
         totals = [r[0] for r in runs]
         builds = [r[1] for r in runs]
         jobs = [r[2] for r in runs]
+        tasks = [r[3] for r in runs]
         rec = {
             "q": name,
             "min": min(totals),
             "median": statistics.median(totals),
             "runs": totals,
             "jobs": jobs,
+            "tasks": tasks,
             "leaked": leaked,
             "build_min": min(builds),
             "builds": builds,
@@ -126,6 +145,7 @@ def main() -> None:
         print(
             f"[probe] {name}: min={rec['min']} median={rec['median']}"
             f" build_min={rec['build_min']} runs={totals} jobs={jobs}"
+            f" tasks={tasks}"
             f" leaked={leaked}",
             file=sys.stderr,
         )
