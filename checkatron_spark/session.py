@@ -6,10 +6,10 @@ logical plans scale to a multi-executor cluster at ~100 TB:
 - AQE on (runtime coalescing, skew-join splitting, dynamic broadcast) — the
   diff operator's full-outer join inherits skew handling for free.
 - shuffle.partitions sized for the local harness; on a real cluster this is
-  overridden (or left to AQE's coalescing with a high initial value). It is
-  an upper bound on post-shuffle width for every plan, persisted ones
-  included: ``CACHED_PLAN_CONF`` lets AQE coalesce the final shuffle of a
-  plan behind ``persist()`` too.
+  overridden (or left to AQE's coalescing with a high initial value).
+  ``CACHED_PLAN_CONF`` lets AQE coalesce the final shuffle of a plan behind
+  ``persist()`` as well, so a cached frame's width follows its runtime size
+  instead of always equalling ``spark.sql.shuffle.partitions``.
 - Arrow enabled for the Pandas-UDF extension operators (similarity search,
   multimodal decode) so Python exchange is columnar-batched, not per-row.
 """
@@ -36,8 +36,13 @@ CACHED_PLAN_CONF = (
 )
 
 # /dev/shm is RAM shared with everything else on the host: stream scratch
-# goes there only while at least this much of it is free.
-SHM_SCRATCH_FLOOR_B = 1 << 30
+# goes there only while at least this much of it is free. Measured on the
+# four scratch_tempdir users (stream_ivm_totals, stream_patch_apply,
+# stream_ivm_join, stream_ann_ivf_admission), one pass of all four peaks at
+# 12.8 MB on disk at sf0.1 (2.1 MB at sf0.01, so growth is below linear),
+# and one drain adds at most 8.8 MB (stream_ivm_join). A linear sf1 pass
+# would be 128 MB; the floor is twice that.
+SHM_SCRATCH_FLOOR_B = 256 << 20
 
 
 def get_spark(app_name: str = "checkatron_spark", cpus: str | int | None = None) -> SparkSession:
@@ -145,7 +150,9 @@ def scratch_tempdir(prefix: str) -> str:
     that never outlives the process, but tmpfs pages are host memory, so a
     nearly full ``/dev/shm`` would turn a large drain into ENOSPC or
     memory pressure on every other process; below the floor the default
-    temp dir is the safe choice."""
+    temp dir is the safe choice. The check runs once per call, i.e. once
+    per drain, and the floor is many times what one drain writes; other
+    processes filling ``/dev/shm`` during a drain can still cause ENOSPC."""
     import atexit
     import shutil
     import tempfile
